@@ -10,18 +10,19 @@ Pixel decode is REAL for PPM (raw RGB), uncompressed 24-bit BMP,
 8-bit truecolor PNG (chunk walk + CRC verify + stdlib-zlib inflate +
 scanline unfiltering — _png_pixels), and global-color-table GIF
 (container walk + a full pure-Python LZW codec — _gif_pixels /
-_lzw_decode), and BASELINE JPEG — grayscale AND 4:4:4 color (marker
-walk, DHT-driven canonical Huffman entropy decode with byte
-unstuffing, interleaved MCUs with per-component DC predictors at ANY
-integer sampling layout incl. 4:2:0, dequant, 8x8 IDCT, chroma
-upsample, JFIF YCbCr→RGB — _jpeg_pixels), PROGRESSIVE (SOF2)
-JPEG (multi-scan spectral selection + successive approximation with
-EOB runs and refinement bits — _jpeg_pixels_progressive, r6), and
-ARITHMETIC-coded JPEG, both sequential SOF9 AND progressive SOF10
-(T.81 Annex E QM coder + section F.2/G.2 conditioning models,
-validated byte-exact against libjpeg — _jpeg_pixels_arith /
-_jpeg_pixels_arith_prog, r7); only lossless (SOF3/11) JPEG still
-needs a library and raises NotImplementedError. Frame
+_lzw_decode), and JPEG (_jpeg_pixels). JPEG is one pipeline: one
+marker walk (_jpeg_segments) and one frame/scan header model
+(_jpeg_header) that validates DQT/DHT/DAC/DRI/SOFn/SOS once; four
+entropy decoders that only turn scan bodies into zigzag coefficient
+grids — BASELINE Huffman (interleaved MCUs with per-component DC
+predictors at ANY integer sampling layout incl. 4:2:0), PROGRESSIVE
+SOF2 (spectral selection + successive approximation with EOB runs and
+refinement bits), and ARITHMETIC SOF9/SOF10 (T.81 Annex E QM coder +
+F.2/G.2 conditioning models, validated byte-exact against libjpeg);
+and one reconstruction tail (_jpeg_finish: dequant, batched 8x8 IDCT,
+chroma upsample, JFIF YCbCr→RGB). Lossless (SOF3/11) and the
+extended-Huffman/hierarchical frames still need a library and raise
+NotImplementedError. Frame
 sampling is REAL over the concatenated-P6 toy video container
 synthesized here (parse frame boundaries, emit every Nth).
 
@@ -38,6 +39,7 @@ import hashlib
 import re
 import struct
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -80,33 +82,9 @@ def parse_image_header(b: bytes) -> tuple[int, int, str] | None:
         w, h = struct.unpack("<ii", b[18:26])
         return _bounded(w, abs(h), "image/bmp")  # negative h = top-down BMP
     if b[:2] == b"\xff\xd8":
-        dims = _jpeg_dims(b)
-        if dims:
-            return _bounded(dims[0], dims[1], "image/jpeg")
-    return None
-
-
-def _jpeg_dims(b: bytes) -> tuple[int, int] | None:
-    """(width, height) from the first SOFn marker — the JPEG header
-    walk (segments are length-prefixed, entropy data comes only after
-    SOS so the walk never needs unstuffing)."""
-    pos = 2
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            if pos + 9 > len(b):
-                return None
-            h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-            return w, h
-        if marker in (0xDA, 0xD9):
-            return None
-        seglen = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-        pos += 2 + seglen
+        frame = _jpeg_sof(b)
+        if frame:
+            return _bounded(frame.w, frame.h, "image/jpeg")
     return None
 
 
@@ -153,10 +131,8 @@ def _fuse_or_map(blobs: DataFrame, gen, schema: str) -> DataFrame:
     producer's batch transform when blobs carries the fusion tag (see
     _tagged_map). The result is tagged again, so 3-stage chains
     (synthesize -> decode -> stats) collapse to one Python stage."""
-    import os as _os
-
     tag = getattr(blobs, "_fq_fuse", None)
-    if tag is None or _os.environ.get("FQ_FUSE_DISABLE"):  # measurement kill-switch
+    if tag is None:
         return _tagged_map(blobs, gen, schema)
     src, prod = tag
 
@@ -164,6 +140,20 @@ def _fuse_or_map(blobs: DataFrame, gen, schema: str) -> DataFrame:
         return gen(prod(batches))
 
     return _tagged_map(src, _composed, schema)
+
+
+def _synth_blobs(df: DataFrame, id_col: str, make) -> DataFrame:
+    """(doc_id, content) with content = make(doc_id) per row: the one
+    mapInPandas body behind every deterministic synthesizer, tagged so
+    a downstream decode stage fuses with it (_tagged_map)."""
+
+    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"doc_id": pdf[id_col], "content": [make(int(i)) for i in pdf[id_col]]}
+            )
+
+    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
 
 
 def synthesize_blobs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -187,14 +177,7 @@ def _ppm_bytes(doc_id: int) -> bytes:
 
 def synthesize_ppm_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Real P6 images per row (deterministic), via mapInPandas."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "content": pdf[id_col].map(_ppm_bytes)}
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _ppm_bytes)
 
 
 def decode_image_meta(blobs: DataFrame, id_col: str = "doc_id", sniff: bool = True) -> DataFrame:
@@ -258,14 +241,7 @@ def _wav_bytes(doc_id: int) -> bytes:
 
 def synthesize_wav_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Real WAV audio per row (deterministic), via mapInPandas."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "content": pdf[id_col].map(_wav_bytes)}
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _wav_bytes)
 
 
 def parse_wav(b: bytes) -> tuple[int, int, int, int, int] | None:
@@ -459,19 +435,9 @@ def synthesize_ppm_video(
 ) -> DataFrame:
     """Toy video container: n_frames concatenated P6 frames (each a
     valid PPM; frame k of doc d is the PPM of id d*1000+k)."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": pdf[id_col].map(
-                        lambda d: b"".join(_ppm_bytes(d * 1000 + k) for k in range(n_frames))
-                    ),
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(
+        df, id_col, lambda d: b"".join(_ppm_bytes(d * 1000 + k) for k in range(n_frames))
+    )
 
 
 def frame_sample(blobs: DataFrame, every_n: int = 2, id_col: str = "doc_id") -> DataFrame:
@@ -701,17 +667,7 @@ def _png_bytes(doc_id: int) -> bytes:
 
 def synthesize_png_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content): deterministic valid PNGs (see _png_bytes)."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_png_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _png_bytes)
 
 
 def image_pixel_stats(
@@ -762,34 +718,19 @@ def image_pixel_stats(
     return _fuse_or_map(blobs, _stats, schema)
 
 
-# Frame types _jpeg_pixels dispatches to a real decoder; everything
-# else (SOF3/SOF11 lossless and the extended/differential modes) is
-# the documented codec boundary and routes to quarantine below.
-_JPEG_DECODABLE_SOF = {0xC0, 0xC2, 0xC9, 0xCA}
+# Lossless frame types: the quarantine reason names them apart from
+# the other frames _jpeg_pixels does not decode (extended-sequential
+# Huffman, hierarchical/differential).
 _JPEG_LOSSLESS_SOF = {0xC3, 0xC7, 0xCB, 0xCF}
 
 
 def jpeg_sof_marker(b: bytes) -> int | None:
     """First SOFn marker byte of a JPEG stream (0xC0..0xCF minus DHT/
-    DAC), or None if the stream has no frame header. The same walk
-    _jpeg_dims does, kept separate so classification never risks a
-    decode."""
-    if b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    while pos + 3 < len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return marker
-        if marker in (0xDA, 0xD9):
-            return None
-        pos += 2 + struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-    return None
+    JPG/DAC), or None if the stream has no readable frame header. Reads
+    the header model only up to SOFn (_jpeg_sof), so classification
+    never risks a decode."""
+    frame = _jpeg_sof(b)
+    return frame.marker if frame else None
 
 
 def image_pixel_stats_quarantine(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -821,15 +762,15 @@ def image_pixel_stats_quarantine(blobs: DataFrame, id_col: str = "doc_id") -> Da
                 data = bytes(b)
                 parsed = parse_image_header(data)
                 fmt = parsed[2] if parsed else None
-                sof = jpeg_sof_marker(data) if fmt == "image/jpeg" else None
-                if sof is not None and sof not in _JPEG_DECODABLE_SOF:
+                frame = _jpeg_sof(data) if fmt == "image/jpeg" else None
+                if frame is not None and frame.marker not in _JPEG_SCAN_DECODERS:
+                    sof = frame.marker
                     kind = "lossless" if sof in _JPEG_LOSSLESS_SOF else "unsupported"
-                    dims = _jpeg_dims(data)
                     rows["doc_id"].append(doc_id)
                     rows["status"].append("quarantined")
                     rows["reason"].append(f"jpeg-sof{sof - 0xC0}-{kind}")
-                    rows["width"].append(dims[0] if dims else None)
-                    rows["height"].append(dims[1] if dims else None)
+                    rows["width"].append(frame.w)
+                    rows["height"].append(frame.h)
                     rows["pixel_sum"].append(None)
                     continue
                 codec = {
@@ -1103,17 +1044,7 @@ def _gif_bytes(doc_id: int) -> bytes:
 
 def synthesize_gif_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content): deterministic valid GIF87a files (_gif_bytes)."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_gif_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _gif_bytes)
 
 
 def _gif_bytes_interlaced(doc_id: int) -> bytes:
@@ -1152,30 +1083,21 @@ def _gif_bytes_interlaced(doc_id: int) -> bytes:
 def synthesize_gif_interlaced_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content): interlaced, local-palette GIF89a files
     (_gif_bytes_interlaced)."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_gif_bytes_interlaced(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _gif_bytes_interlaced)
 
 
-# --- Real baseline JPEG decode, grayscale (r5, late) ----------------------
-# The "JPEG needs a library" boundary is narrower than it looks: for
-# BASELINE GRAYSCALE the whole pipeline — marker walk, DQT/DHT/SOF0/
-# SOS parse, canonical Huffman entropy decode with byte-unstuffing,
-# coefficient dequant, 8x8 IDCT (numpy), level shift — is implemented
-# here for real. The synthesized corpus carries its own DHT tables, so
-# nothing depends on the spec's example tables. Color (any integer
-# sampling layout) landed in r5, progressive (SOF2) in r6, and
-# arithmetic entropy coding in r7 — sequential SOF9 AND progressive
-# SOF10, see the arithmetic sections below; what still needs a
-# library: lossless (SOF3/SOF11) only, which routes to the typed
+# --- Real JPEG decode: container, header model, reconstruction (r5-r7) ---
+# The "JPEG needs a library" boundary is narrower than it looks: marker
+# walk, DQT/DHT/DAC/DRI/SOFn/SOS parse, entropy decode, dequant, 8x8
+# IDCT (numpy), chroma upsample and YCbCr→RGB are implemented here for
+# real. One walker (_jpeg_segments) and one frame/scan header model
+# (_jpeg_header) serve every JPEG reader — header sniffing, the
+# quarantine classifier and all four entropy decoders. The decoders
+# (baseline Huffman, progressive Huffman, sequential QM, progressive
+# QM) only turn scan bodies into int32 zigzag coefficient grids;
+# _jpeg_finish reconstructs pixels from those grids for all of them.
+# What still needs a library: lossless (SOF3/SOF11) and the
+# extended-Huffman/hierarchical frames, which route to the typed
 # quarantine path (image_pixel_stats_quarantine) instead of failing.
 
 _ZIGZAG = [
@@ -1184,6 +1106,391 @@ _ZIGZAG = [
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
+
+# SOFn markers: 0xC0..0xCF minus DHT (C4), JPG (C8) and DAC (CC).
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def _jpeg_segments(data: bytes) -> Iterator[tuple[int, bytes, list[int]]]:
+    """THE JPEG marker walk (T.81 B.1): yields (marker, body, starts) for
+    each length-prefixed segment after SOI, up to EOI or the end of the
+    data. For SOS the walk also skips the scan's entropy-coded data to
+    the next marker that is not RSTn (stuffed 0xFF00 never ends it), and
+    `starts` holds the offset where each restart interval's data begins;
+    the m-th RSTn must be RST((m-1) mod 8), so a dropped or duplicated
+    restart segment raises instead of resyncing to the wrong marker.
+    For every other segment `starts` is empty. Fill bytes and standalone
+    markers (TEM, stray RSTn) are skipped. A stream that does not start
+    with SOI, a misaligned marker or a segment running past the data
+    raises ValueError."""
+    if data[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG")
+    pos, n = 2, len(data)
+    while pos + 1 < n:
+        if data[pos] != 0xFF:
+            raise ValueError("bad JPEG marker alignment")
+        marker = data[pos + 1]
+        if marker == 0xD9:  # EOI
+            return
+        if marker == 0xFF:  # fill byte
+            pos += 1
+            continue
+        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        end = pos + 2 + int.from_bytes(data[pos + 2 : pos + 4], "big")
+        if pos + 4 > n or end > n:
+            raise ValueError("truncated JPEG segment")
+        if end < pos + 4:
+            raise ValueError("bad JPEG segment length")
+        body, pos, starts = data[pos + 4 : end], end, []
+        if marker == 0xDA:
+            starts.append(pos)
+            while True:
+                pos = data.find(b"\xff", pos)
+                if pos < 0 or pos + 1 >= n:  # scan data runs to the end
+                    pos = n
+                    break
+                nxt = data[pos + 1]
+                if nxt in (0x00, 0xFF):  # stuffed data byte / fill byte
+                    pos += 2 if nxt == 0x00 else 1
+                    continue
+                if not 0xD0 <= nxt <= 0xD7:
+                    break
+                want = 0xD0 + (len(starts) - 1) % 8
+                if nxt != want:
+                    raise ValueError(
+                        "JPEG restart marker out of sequence: got "
+                        f"RST{nxt - 0xD0}, expected RST{want - 0xD0}"
+                    )
+                pos += 2
+                starts.append(pos)
+        yield marker, body, starts
+
+
+class _JpegComponent(NamedTuple):
+    """A frame component: id, sampling factors, quant table selector."""
+
+    cid: int
+    hi: int
+    vi: int
+    tq: int
+
+
+class _JpegScan(NamedTuple):
+    """A scan header: (frame component index, Td, Ta) per scan
+    component, spectral selection, successive approximation, the
+    restart interval and entropy tables in force at its SOS (Huffman
+    tables from DHT, or arithmetic conditioning from DAC, keyed
+    (class, id)), and the restart intervals' data offsets."""
+
+    comps: list[tuple[int, int, int]]
+    ss: int
+    se: int
+    ah: int
+    al: int
+    restart: int
+    tables: dict
+    starts: list[int]
+
+
+class _JpegFrame:
+    """A frame header (SOFn, T.81 B.2.2) with the quant tables and scans
+    the walk collected for it. Built and validated by _jpeg_header."""
+
+    def __init__(self, marker: int, seg: bytes):
+        if len(seg) < 6 or not seg[5] or len(seg) != 6 + 3 * seg[5]:
+            raise ValueError("bad JPEG SOF segment")
+        self.marker, self.precision = marker, seg[0]
+        self.h, self.w = struct.unpack(">HH", seg[1:5])
+        self.comps: list[_JpegComponent] = []
+        for i in range(6, len(seg), 3):
+            c = _JpegComponent(seg[i], seg[i + 1] >> 4, seg[i + 1] & 0x0F, seg[i + 2])
+            if not (1 <= c.hi <= 4 and 1 <= c.vi <= 4):
+                raise ValueError(f"bad JPEG sampling factors {c.hi}x{c.vi}")
+            if c.tq > 3:
+                raise ValueError(f"JPEG quant table selector {c.tq} out of range")
+            self.comps.append(c)
+        if len({c.cid for c in self.comps}) != len(self.comps):
+            raise ValueError("duplicate JPEG component id")
+        self.hmax = max(c.hi for c in self.comps)
+        self.vmax = max(c.vi for c in self.comps)
+        self.mcus_x = (self.w + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcus_y = (self.h + 8 * self.vmax - 1) // (8 * self.vmax)
+        self.qtables: dict[int, list[int]] = {}
+        self.scans: list[_JpegScan] = []
+
+
+def _jpeg_header(data: bytes, frame_only: bool = False) -> _JpegFrame:
+    """Parse and validate every header segment of a JPEG stream ONCE —
+    DQT, DHT, DAC, DRI, SOFn and SOS: table classes and ids, sampling
+    factors, component ids and each scan's component and table
+    selectors are checked here, so no entropy decoder indexes a table
+    that cannot exist. Huffman and conditioning tables may be redefined
+    between scans, so each scan keeps the set in force at its SOS
+    (DAC defaults: L=0, U=1, Kx=5). frame_only stops at the frame
+    header — sniffing reads nothing after SOFn. Raises ValueError."""
+    frame, qtables, restart = None, {}, 0
+    huff: dict = {}
+    cond: dict = {(tc, t): (0, 1) if tc == 0 else 5 for tc in (0, 1) for t in range(4)}
+    for marker, seg, starts in _jpeg_segments(data):
+        if marker in _JPEG_SOF:
+            if frame is not None:
+                raise ValueError("JPEG has more than one frame header")
+            frame = _JpegFrame(marker, seg)
+            if frame_only:
+                return frame
+        elif marker == 0xDB:  # DQT: Pq=0 8-bit, Pq=1 16-bit entries
+            p = 0
+            while p < len(seg):
+                pq, tq = seg[p] >> 4, seg[p] & 0x0F
+                if pq > 1 or tq > 3 or p + 65 + 64 * pq > len(seg):
+                    raise ValueError("bad JPEG DQT segment")
+                body = seg[p + 1 : p + 65 + 64 * pq]
+                qtables[tq] = list(struct.unpack(">64H", body) if pq else body)
+                p += 65 + 64 * pq
+        elif marker == 0xC4:  # DHT
+            p = 0
+            while p < len(seg):
+                tc, th = seg[p] >> 4, seg[p] & 0x0F
+                end = p + 17 + sum(seg[p + 1 : p + 17])
+                if tc > 1 or th > 3 or end > len(seg):
+                    raise ValueError("bad JPEG DHT segment")
+                huff[(tc, th)] = _huff_decode_table(bytes(seg[p:end]))
+                p = end
+        elif marker == 0xCC:  # DAC: arithmetic conditioning
+            if len(seg) % 2:
+                raise ValueError("bad JPEG DAC segment")
+            for p in range(0, len(seg), 2):
+                tc, tb, cs = seg[p] >> 4, seg[p] & 0x0F, seg[p + 1]
+                if tc > 1 or tb > 3:
+                    raise ValueError("bad JPEG DAC segment")
+                cond[(tc, tb)] = cs if tc else (cs & 0x0F, cs >> 4)
+        elif marker == 0xDD:  # DRI: restart interval in MCUs
+            if len(seg) != 2:
+                raise ValueError("bad JPEG DRI segment")
+            restart = int.from_bytes(seg, "big")
+        elif marker == 0xDA:
+            if frame is None:
+                raise ValueError("JPEG SOS before SOF")
+            if not seg or not seg[0] or len(seg) != 4 + 2 * seg[0]:
+                raise ValueError("bad JPEG SOS segment")
+            by_cid = {c.cid: ci for ci, c in enumerate(frame.comps)}
+            comps = []
+            for i in range(1, 1 + 2 * seg[0], 2):
+                if seg[i] not in by_cid:
+                    raise ValueError("SOS names unknown component")
+                td, ta = seg[i + 1] >> 4, seg[i + 1] & 0x0F
+                if td > 3 or ta > 3:
+                    raise ValueError(f"JPEG scan table selector {td}/{ta} out of range")
+                comps.append((by_cid[seg[i]], td, ta))
+            ss, se, ahal = seg[-3:]
+            tables = dict(cond if frame.marker & 0x08 else huff)  # SOF9+ are arithmetic
+            frame.scans.append(
+                _JpegScan(comps, ss, se, ahal >> 4, ahal & 0x0F, restart, tables, starts)
+            )
+    if frame is None:
+        raise ValueError("JPEG missing SOF")
+    frame.qtables = qtables
+    return frame
+
+
+def _jpeg_sof(data: bytes) -> _JpegFrame | None:
+    """The frame header of a JPEG stream, or None when there is none or
+    the walk up to it is damaged — the non-raising sniff behind
+    parse_image_header, jpeg_sof_marker and the quarantine classifier."""
+    try:
+        return _jpeg_header(data, frame_only=True)
+    except ValueError:
+        return None
+
+
+def _jpeg_coefs(data: bytes) -> tuple[_JpegFrame, list[np.ndarray]]:
+    """Coefficient-level JPEG decode for every supported mode: the
+    header model, then each scan body decoded by the frame's entropy
+    decoder into per-component int32 [bh, bw, 64] zigzag grids over the
+    MCU-padded block grid. Exposed so tests compare coefficients
+    byte-exact against libjpeg's dump (pixel space would blur the
+    comparison through two different IDCT roundings)."""
+    frame = _jpeg_header(data)
+    decode_scan = _JPEG_SCAN_DECODERS.get(frame.marker)
+    if decode_scan is None:
+        raise NotImplementedError(
+            f"SOF{frame.marker - 0xC0}: extended-sequential-Huffman, lossless "
+            "and hierarchical JPEG unsupported (baseline SOF0, progressive "
+            "SOF2, sequential-arithmetic SOF9, and progressive-arithmetic "
+            "SOF10 decode are real)"
+        )
+    if frame.precision != 8:
+        raise NotImplementedError("only 8-bit JPEG supported")
+    if len(frame.comps) not in (1, 3):
+        raise NotImplementedError(f"{len(frame.comps)}-component JPEG unsupported")
+    if any(frame.hmax % c.hi or frame.vmax % c.vi for c in frame.comps):
+        raise NotImplementedError("non-integer chroma sampling ratios")
+    if not frame.scans:
+        raise ValueError("JPEG has no scan data")
+    coefs = [
+        np.zeros((frame.mcus_y * c.vi, frame.mcus_x * c.hi, 64), np.int32)
+        for c in frame.comps
+    ]
+    try:
+        for scan in frame.scans:
+            decode_scan(data, frame, scan, coefs)
+    except OverflowError:  # corrupt data shifted a coefficient past int32
+        raise ValueError("corrupt JPEG: coefficient out of range") from None
+    return frame, coefs
+
+
+def _jpeg_pixels(data: bytes) -> tuple[int, int, bytes]:
+    """REAL JPEG decode — baseline (SOF0), progressive (SOF2),
+    sequential-arithmetic (SOF9) and progressive-arithmetic (SOF10),
+    grayscale and color at ANY integer sampling layout (4:4:4, 4:2:0,
+    4:2:2, ...): the coefficient decode (_jpeg_coefs), then the shared
+    reconstruction tail (_jpeg_finish). Lossless (SOF3/SOF11),
+    extended-Huffman and hierarchical frames raise NotImplementedError —
+    the remaining library boundary."""
+    return _jpeg_finish(*_jpeg_coefs(data))
+
+
+def _scan_mcus(frame: _JpegFrame, scan: _JpegScan):
+    """A scan's MCUs in coding order (T.81 A.2), as (start, blocks):
+    `blocks` lists the MCU's (si, by, bx) — si indexes scan.comps, (by,
+    bx) that component's coefficient grid. An interleaved scan covers
+    the MCU grid with hi x vi blocks per component; a single-component
+    scan covers the component's real block grid, one block per MCU.
+    `start` is the data offset of a new restart interval — at the first
+    MCU and every scan.restart MCUs after it, where the decoder starts a
+    fresh entropy reader and resets its predictors — else None."""
+    if len(scan.comps) > 1:
+        sc = [(si, frame.comps[ci]) for si, (ci, _, _) in enumerate(scan.comps)]
+        units = (
+            [
+                (si, my * c.vi + y, mx * c.hi + x)
+                for si, c in sc
+                for y in range(c.vi)
+                for x in range(c.hi)
+            ]
+            for my in range(frame.mcus_y)
+            for mx in range(frame.mcus_x)
+        )
+    else:
+        # the component's real block grid: ceil(its sample dims / 8)
+        c = frame.comps[scan.comps[0][0]]
+        bw = ((frame.w * c.hi + frame.hmax - 1) // frame.hmax + 7) // 8
+        bh = ((frame.h * c.vi + frame.vmax - 1) // frame.vmax + 7) // 8
+        units = ([(0, by, bx)] for by in range(bh) for bx in range(bw))
+    for n, blocks in enumerate(units):
+        if n and not (scan.restart and n % scan.restart == 0):
+            yield None, blocks
+            continue
+        m = n // scan.restart if scan.restart else 0
+        if m >= len(scan.starts):
+            raise ValueError("expected JPEG restart marker")
+        yield scan.starts[m], blocks
+
+
+@functools.cache
+def _idct_matrix():
+    # memoized: the 8x8 basis is a constant, and rebuilding it per
+    # image was ~4% of the small-image decode profile (r12 opt)
+    import math
+
+    a = np.zeros((8, 8))
+    for u in range(8):
+        cu = (1 / math.sqrt(2)) if u == 0 else 1.0
+        for x in range(8):
+            a[u, x] = (cu / 2) * math.cos((2 * x + 1) * u * math.pi / 16)
+    return a
+
+
+def _jpeg_finish(frame: _JpegFrame, coefs: list[np.ndarray]) -> tuple[int, int, bytes]:
+    """THE JPEG reconstruction tail, shared by all four decoders:
+    dequantize each component's zigzag grid, 8x8 IDCT batched over
+    every block, level shift, nearest-neighbor chroma upsample to the
+    full grid, crop to the frame, level-clamped JFIF YCbCr→RGB
+    (grayscale replicates)."""
+    a = _idct_matrix()
+    rows, cols = [z // 8 for z in _ZIGZAG], [z % 8 for z in _ZIGZAG]
+    w, h = frame.w, frame.h
+    planes = []
+    for c, grid in zip(frame.comps, coefs):
+        if c.tq not in frame.qtables:
+            raise ValueError("JPEG missing DQT for a component")
+        bh, bw = grid.shape[:2]
+        f = np.zeros((bh, bw, 8, 8))
+        f[:, :, rows, cols] = grid * np.array(frame.qtables[c.tq], np.float64)
+        # pixel[i,j] = sum_{u,v} a[u,i] f[u,v] a[v,j] per block: the
+        # a.T @ f @ a contraction order, batched over (bh, bw) without
+        # einsum's per-call path search (~20% of the decode profile)
+        px = (a.T @ f) @ a
+        plane = px.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8) + 128.0
+        fy, fx = frame.vmax // c.vi, frame.hmax // c.hi
+        if fy > 1 or fx > 1:
+            plane = np.repeat(np.repeat(plane, fy, axis=0), fx, axis=1)
+        planes.append(plane[:h, :w])
+    if len(planes) == 1:
+        gray = np.clip(np.rint(planes[0]), 0, 255).astype("uint8")
+        return w, h, np.repeat(gray.reshape(-1), 3).tobytes()
+    y, cb, cr = planes
+    rgb = np.stack(
+        [
+            y + 1.402 * (cr - 128.0),
+            y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+            y + 1.772 * (cb - 128.0),
+        ],
+        axis=-1,
+    )
+    return w, h, np.clip(np.rint(rgb), 0, 255).astype("uint8").tobytes()
+
+
+# --- JPEG writer side ------------------------------------------------------
+# The synthesized corpora and the property tests need valid files of
+# every decoded mode; all encoders emit through one segment writer.
+
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One length-prefixed marker segment (T.81 B.1.1.4)."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _jpeg_file(
+    sof: int, w: int, h: int, sampling: list[int], q: list[int],
+    tables: bytes, scans: list[tuple[bytes, bytes]],
+) -> bytes:
+    """A whole JPEG stream: SOI, DQT table 0, the entropy `tables`
+    segment (DHT or DAC), SOFn at 8-bit precision with components 1..n
+    at the given sampling bytes (hi << 4 | vi), all on quant table 0,
+    then each (SOS body, entropy-coded data) scan and EOI."""
+    sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([len(sampling)])
+    for ci, s in enumerate(sampling):
+        sof_body += bytes([ci + 1, s, 0])
+    out = b"\xff\xd8" + _jpeg_seg(0xDB, bytes([0x00]) + bytes(q)) + tables
+    out += _jpeg_seg(sof, sof_body)
+    for sos, entropy in scans:
+        out += _jpeg_seg(0xDA, sos) + entropy
+    return out + b"\xff\xd9"
+
+
+def _flat_blocks(doc_id: int) -> tuple[list[list[int]], int, int]:
+    """(raster zigzag blocks, w, h) of the synthesized corpora's closed
+    form: w=8*(1+id%3), h=8*(1+id%2), each 8x8 block FLAT with DC chosen
+    so the decoded value is the exact integer 128 + 2*dc (quant step 16
+    → IDCT of a DC-only block is the constant dc*16/8): block (bx,by)
+    decodes to 128 + 2*((doc_id + bx + 3*by) % 64 - 32) — a closed form
+    any SQL engine reproduces. Lossless BY CONSTRUCTION, so every
+    decode pipeline (markers, tables, entropy decode, dequant, IDCT) is
+    byte-exact verifiable despite JPEG being a lossy format in general."""
+    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
+    blocks = []
+    for by in range(bh):
+        for bx in range(bw):
+            zz = [0] * 64
+            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
+            blocks.append(zz)
+    return blocks, 8 * bw, 8 * bh
+
+
+# --- Baseline (SOF0) Huffman decode + encode (r5) --------------------------
 
 # Our canonical tables (carried in DHT — any table-driven decoder,
 # including this one, reads them from the file): DC categories 0..11
@@ -1196,6 +1503,15 @@ _JPEG_AC_VALS = [0x00, 0xF0] + [
     (run << 4) | size for run in range(16) for size in range(1, 11)
 ]
 _JPEG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 0, len(_JPEG_AC_VALS), 0, 0, 0, 0, 0, 0, 0]
+
+
+def _jpeg_dht(ac_bits: list[int], ac_vals: list[int]) -> bytes:
+    """DHT segment with our canonical DC table 0 and the AC table 0."""
+    return _jpeg_seg(
+        0xC4,
+        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+        + bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals),
+    )
 
 
 def _canonical_codes(bits: list[int], vals: list[int]):
@@ -1317,10 +1633,18 @@ def _encode_block(w: _BitWriter, coeffs: list[int], prev_dc: int, dc_codes, ac_c
     return coeffs[0]
 
 
+def _dc_diff(r: _BitReader, dc_tbl) -> int:
+    """One Huffman-coded DC difference: category, then that many
+    magnitude bits. 8-bit DCT differences need at most category 11."""
+    size = r.huff(dc_tbl)
+    if size > 11:
+        raise ValueError("corrupt JPEG DC category")
+    return _extend(r.bits(size), size) if size else 0
+
+
 def _decode_block(r: _BitReader, prev_dc: int, dc_tbl, ac_tbl) -> tuple[list[int], int]:
     coeffs = [0] * 64
-    size = r.huff(dc_tbl)
-    dc = prev_dc + (_extend(r.bits(size), size) if size else 0)
+    dc = prev_dc + _dc_diff(r, dc_tbl)
     coeffs[0] = dc
     i = 1
     while i < 64:
@@ -1337,28 +1661,6 @@ def _decode_block(r: _BitReader, prev_dc: int, dc_tbl, ac_tbl) -> tuple[list[int
         coeffs[i] = _extend(r.bits(size), size)
         i += 1
     return coeffs, dc
-
-
-_IDCT_MATRIX = None
-
-
-def _idct_matrix():
-    # memoized: the 8x8 basis is a constant, and rebuilding it per
-    # image was ~4% of the small-image decode profile (r12 opt)
-    global _IDCT_MATRIX
-    if _IDCT_MATRIX is not None:
-        return _IDCT_MATRIX
-    import math
-
-    import numpy as np
-
-    a = np.zeros((8, 8))
-    for u in range(8):
-        cu = (1 / math.sqrt(2)) if u == 0 else 1.0
-        for x in range(8):
-            a[u, x] = (cu / 2) * math.cos((2 * x + 1) * u * math.pi / 16)
-    _IDCT_MATRIX = a
-    return a
 
 
 @functools.lru_cache(maxsize=256)
@@ -1379,361 +1681,71 @@ def _huff_decode_table(payload: bytes) -> dict:
     return {(c, ln): sym for sym, (c, ln) in codes.items()}
 
 
-def _jpeg_pixels(data: bytes) -> tuple[int, int, bytes]:
-    """REAL baseline JPEG decode — GRAYSCALE and COLOR at ANY integer
-    sampling-factor layout (4:4:4, 4:2:0, 4:2:2, ...): marker walk →
-    DQT/DHT/SOF0/SOS → canonical Huffman entropy decode (tables read
-    from the file's own DHT, per-component DC predictors) → interleaved
-    MCUs of hi*vi blocks per component → dequant in zigzag order →
-    8x8 IDCT → nearest-neighbor chroma upsample → level shift/clamp →
-    JFIF YCbCr→RGB (gray replicates). Progressive (SOF2) dispatches
-    to _jpeg_pixels_progressive, arithmetic SOF9/SOF10 to the QM-coder
-    decoders; only lossless (SOF3/SOF11) raises NotImplementedError —
-    the remaining library boundary."""
-    import numpy as np
+def _huff_seq_scan(data: bytes, frame: _JpegFrame, scan: _JpegScan, coefs) -> None:
+    """Baseline scan body: per block a Huffman DC difference against the
+    component's predictor plus run-length AC coefficients
+    (_decode_block); each restart interval byte-aligns a fresh bit
+    reader and resets every predictor (spec F.2.1.3.1)."""
+    tabs = [(ci, scan.tables.get((0, td)), scan.tables.get((1, ta))) for ci, td, ta in scan.comps]
+    if any(dc is None or ac is None for _, dc, ac in tabs):
+        raise ValueError("JPEG missing Huffman tables")
+    for start, blocks in _scan_mcus(frame, scan):
+        if start is not None:
+            r = _BitReader(data, start)
+            pred = [0] * len(tabs)
+        for si, by, bx in blocks:
+            ci, dc, ac = tabs[si]
+            coefs[ci][by, bx], pred[si] = _decode_block(r, pred[si], dc, ac)
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []  # SOF order: {cid, tq, dc, ac}
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            raise ValueError("JPEG has no scan data")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                n = sum(seg[p + 1 : p + 17])
-                htables[(tc, th)] = _huff_decode_table(bytes(seg[p : p + 17 + n]))
-                p += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-        elif marker == 0xC2:  # SOF2: progressive has its own scan loop
-            return _jpeg_pixels_progressive(data)
-        elif marker == 0xC9:  # SOF9: arithmetic has its own entropy coder (r7)
-            return _jpeg_pixels_arith(data)
-        elif marker == 0xCA:  # SOF10: progressive-arithmetic (r7, late)
-            return _jpeg_pixels_arith_prog(data)
-        elif marker in (0xC1, 0xC3, 0xCB):
-            raise NotImplementedError(
-                "extended-sequential-Huffman/lossless JPEG unsupported "
-                "(baseline SOF0, progressive SOF2, sequential-arithmetic "
-                "SOF9, and progressive-arithmetic SOF10 decode are real)"
-            )
-        elif marker == 0xDD:  # DRI: restart interval in MCUs
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:  # SOS
-            ns = seg[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved scans unsupported")
-            by_cid = {c["cid"]: c for c in comps}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                by_cid[cid]["dc"], by_cid[cid]["ac"] = tids >> 4, tids & 0x0F
-            pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF0")
-    for c in comps:
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        c["q"] = qtables[c["tq"]]
-        c["dc_tbl"] = htables.get((0, c.get("dc", 0)))
-        c["ac_tbl"] = htables.get((1, c.get("ac", 0)))
-        if c["dc_tbl"] is None or c["ac_tbl"] is None:
-            raise ValueError("JPEG missing Huffman tables")
-    a = _idct_matrix()
-    hmax = max(c["hi"] for c in comps)
-    vmax = max(c["vi"] for c in comps)
-    if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-        raise NotImplementedError("non-integer chroma sampling ratios")
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * 8 * c["vi"], mcus_x * 8 * c["hi"])) for c in comps
-    ]
-    r = _BitReader(data, pos)
-    prev_dc = [0] * len(comps)
-    mcu_count = 0
+
+def _jpeg_encode_sequential(
+    comp_blocks: list[list[list[int]]], sampling: list[tuple[int, int]],
+    w: int, h: int, q: list[int],
+) -> bytes:
+    """Assemble a valid baseline (SOF0) JPEG from per-component zigzag
+    blocks, each in raster order over the component's MCU-padded block
+    grid, with sampling[ci] = (hi, vi): interleaved MCUs of hi*vi blocks
+    per component, per-component DC predictors, our canonical DHT
+    tables and quant table q shared by every component."""
+    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    hmax, vmax = max(s[0] for s in sampling), max(s[1] for s in sampling)
+    mcus_x, mcus_y = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    wtr = _BitWriter()
+    prev = [0] * len(sampling)
     for my in range(mcus_y):
         for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                # RSTn: byte-align, consume the marker, reset every
-                # component's DC predictor (spec F.2.1.3.1) — camera
-                # files emit these every few MCU rows for resync
-                r.n = 0
-                if (
-                    r.pos + 2 > len(r.data)
-                    or r.data[r.pos] != 0xFF
-                    or not 0xD0 <= r.data[r.pos + 1] <= 0xD7
-                ):
-                    raise ValueError("expected JPEG restart marker")
-                # sequence check (r8, mirrors the arith paths): the
-                # m-th restart carries RST((m-1) mod 8)
-                want = 0xD0 + (mcu_count // restart_interval - 1) % 8
-                if r.data[r.pos + 1] != want:
-                    raise ValueError(
-                        "JPEG restart marker out of sequence: got "
-                        f"RST{r.data[r.pos + 1] - 0xD0}, expected RST{want - 0xD0}"
-                    )
-                r.pos += 2
-                prev_dc = [0] * len(comps)
-            mcu_count += 1
-            # interleaved MCU: hi*vi blocks per component, raster order
-            for ci, c in enumerate(comps):
-                for byi in range(c["vi"]):
-                    for bxi in range(c["hi"]):
-                        zz, prev_dc[ci] = _decode_block(
-                            r, prev_dc[ci], c["dc_tbl"], c["ac_tbl"]
-                        )
-                        f = np.zeros((8, 8))
-                        for i in range(64):
-                            f[_ZIGZAG[i] // 8, _ZIGZAG[i] % 8] = zz[i] * c["q"][i]
-                        y0 = (my * c["vi"] + byi) * 8
-                        x0 = (mx * c["hi"] + bxi) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = a.T @ f @ a + 128.0
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
-
-
-def _jpeg_finish(planes, comps, w, h, hmax, vmax) -> tuple[int, int, bytes]:
-    """Shared JPEG reconstruction tail (baseline + progressive):
-    nearest-neighbor chroma upsample to the full grid, crop to the
-    frame, level-clamped JFIF YCbCr→RGB (grayscale replicates)."""
-    import numpy as np
-
-    for ci, c in enumerate(comps):
-        fy, fx = vmax // c["vi"], hmax // c["hi"]
-        if fy > 1 or fx > 1:
-            planes[ci] = np.repeat(np.repeat(planes[ci], fy, axis=0), fx, axis=1)
-    if len(comps) == 1:
-        gray = np.clip(np.rint(planes[0][:h, :w]), 0, 255).astype("uint8")
-        return w, h, np.repeat(gray.reshape(-1), 3).tobytes()
-    y, cb, cr = (p[:h, :w] for p in planes)
-    rgb = np.stack(
-        [
-            y + 1.402 * (cr - 128.0),
-            y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-            y + 1.772 * (cb - 128.0),
-        ],
-        axis=-1,
+            for ci, (hi, vi) in enumerate(sampling):
+                for y in range(vi):
+                    for x in range(hi):
+                        zz = comp_blocks[ci][(my * vi + y) * mcus_x * hi + mx * hi + x]
+                        prev[ci] = _encode_block(wtr, zz, prev[ci], dc_codes, ac_codes)
+    sos = bytes([len(sampling)])
+    for ci in range(len(sampling)):
+        sos += bytes([ci + 1, 0x00])
+    return _jpeg_file(
+        0xC0, w, h, [(hi << 4) | vi for hi, vi in sampling], q,
+        _jpeg_dht(_JPEG_AC_BITS, _JPEG_AC_VALS),
+        [(sos + bytes([0, 63, 0]), wtr.flush())],
     )
-    return w, h, np.clip(np.rint(rgb), 0, 255).astype("uint8").tobytes()
 
 
 def _jpeg_encode_gray(
     blocks_zz: list[list[int]], w: int, h: int, q: list[int]
 ) -> bytes:
-    """Assemble a valid baseline grayscale JPEG from quantized zigzag
-    coefficient blocks (raster order): DQT + our canonical DHT tables
-    + SOF0 + SOS + Huffman entropy data with byte stuffing. General —
-    arbitrary AC runs encode too (roundtrip with _jpeg_pixels'
-    entropy decoder is property-tested at the coefficient level)."""
-    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    wtr = _BitWriter()
-    prev_dc = 0
-    for zz in blocks_zz:
-        prev_dc = _encode_block(wtr, zz, prev_dc, dc_codes, ac_codes)
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sof = seg(0xC0, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
-
-
-def _jpeg_bytes(doc_id: int) -> bytes:
-    """Deterministic valid baseline grayscale JPEG per doc: w=8*(1+id%3),
-    h=8*(1+id%2); each 8x8 block is FLAT with DC chosen so the decoded
-    value is the exact integer 128 + 2*dc (quant step 16 → IDCT of a
-    DC-only block is the constant dc*16/8): block (bx,by) decodes to
-    128 + 2*((doc_id + bx + 3*by) % 64 - 32) — a closed form any SQL
-    engine reproduces. Lossless BY CONSTRUCTION, so the whole decode
-    pipeline (markers, DHT, Huffman, dequant, IDCT) is byte-exact
-    verifiable despite JPEG being a lossy format in general."""
-    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
-    q = [16] * 64
-    blocks = []
-    for by in range(bh):
-        for bx in range(bw):
-            zz = [0] * 64
-            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
-            blocks.append(zz)
-    return _jpeg_encode_gray(blocks, bw * 8, bh * 8, q)
-
-
-def synthesize_jpeg_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, content): deterministic valid grayscale JPEGs."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_jpeg_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
-
-
-def _jpeg_lossless_bytes(doc_id: int) -> bytes:
-    """Structurally valid LOSSLESS (SOF3) JPEG stub with the same dims
-    closed form as _jpeg_bytes. Lossless JPEG is the documented codec
-    boundary — this file exists to exercise the QUARANTINE path
-    (detection + typed routing), so the entropy segment is a minimal
-    placeholder: the marker walk and SOF header are real (jpeg_sof_
-    marker and _jpeg_dims read them), the sample data is never
-    decoded."""
-    w, h = 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    # SOF3: precision 8, 1 component, 1x1 sampling; lossless frames
-    # carry no quant table (Tq=0 by convention)
-    sof = seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS),
-    )
-    # SOS for lossless: predictor selector 1, point transform 0
-    sos = seg(0xDA, bytes([1, 1, 0x00, 1, 0, 0]))
-    return b"\xff\xd8" + dht + sof + sos + b"\x00\x3f" + b"\xff\xd9"
-
-
-def synthesize_jpeg_mixed_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, content): a mixed crawl-shaped corpus — every 5th doc
-    is a lossless SOF3 file (the quarantine class), the rest are the
-    decodable baseline JPEGs of synthesize_jpeg_blobs."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [
-                        _jpeg_lossless_bytes(int(i)) if int(i) % 5 == 0 else _jpeg_bytes(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    """Baseline grayscale JPEG from quantized zigzag coefficient blocks
+    (raster order). General — arbitrary AC runs encode too (roundtrip
+    with the entropy decoder is property-tested at the coefficient
+    level)."""
+    return _jpeg_encode_sequential([blocks_zz], [(1, 1)], w, h, q)
 
 
 def _jpeg_encode_color(
     comp_blocks: list[list[list[int]]], w: int, h: int, q: list[int]
 ) -> bytes:
-    """Assemble a valid baseline 4:4:4 color JPEG: 3 components (1x1
-    sampling, shared quant + Huffman tables — legal and compact),
-    interleaved MCUs with per-component DC predictors."""
-    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    wtr = _BitWriter()
-    prev = [0, 0, 0]
-    n_blocks = len(comp_blocks[0])
-    for b in range(n_blocks):
-        for ci in range(3):
-            prev[ci] = _encode_block(
-                wtr, comp_blocks[ci][b], prev[ci], dc_codes, ac_codes
-            )
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
-
-
-def _jpeg_color_bytes(doc_id: int) -> bytes:
-    """Deterministic valid baseline COLOR JPEG per doc (4:4:4): same
-    flat-block geometry as _jpeg_bytes, luma DC as there, chroma DCs
-    ZERO (Cb = Cr = 128 exactly — neutral), so YCbCr→RGB degenerates
-    to R = G = B = Y with NO rounding ambiguity: the color machinery
-    (3-component SOF/SOS, interleaved MCUs, per-component predictors)
-    is byte-exact verifiable by the same closed form as the grayscale
-    file. Non-neutral chroma conversion is pinned in pytest instead
-    (cross-engine float rounding at .5 would poison a SQL oracle)."""
-    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
-    q = [16] * 64
-    y_blocks, zero_blocks = [], []
-    for by in range(bh):
-        for bx in range(bw):
-            zz = [0] * 64
-            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
-            y_blocks.append(zz)
-            zero_blocks.append([0] * 64)
-    return _jpeg_encode_color(
-        [y_blocks, zero_blocks, list(zero_blocks)], bw * 8, bh * 8, q
-    )
-
-
-def synthesize_jpeg_color_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, content): deterministic valid 4:4:4 color JPEGs."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_jpeg_color_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    """Baseline 4:4:4 color JPEG: 3 components at 1x1 sampling, shared
+    quant + Huffman tables — legal and compact."""
+    return _jpeg_encode_sequential(comp_blocks, [(1, 1)] * 3, w, h, q)
 
 
 def _jpeg_encode_420(
@@ -1744,285 +1756,123 @@ def _jpeg_encode_420(
     mcus_y: int,
     q: list[int],
 ) -> bytes:
-    """Assemble a valid baseline 4:2:0 color JPEG (Y at 2x2, chroma at
-    1x1): each MCU carries 4 Y blocks (raster order within the MCU)
-    then Cb then Cr. `y_blocks` is raster order over the FULL Y block
-    grid (2*mcus_x wide); chroma lists are raster over the MCU grid."""
-    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    wtr = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for byi in range(2):
-                for bxi in range(2):
-                    yb = y_blocks[(my * 2 + byi) * (mcus_x * 2) + mx * 2 + bxi]
-                    prev[0] = _encode_block(wtr, yb, prev[0], dc_codes, ac_codes)
-            prev[1] = _encode_block(
-                wtr, cb_blocks[my * mcus_x + mx], prev[1], dc_codes, ac_codes
-            )
-            prev[2] = _encode_block(
-                wtr, cr_blocks[my * mcus_x + mx], prev[2], dc_codes, ac_codes
-            )
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    w, h = mcus_x * 16, mcus_y * 16
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
+    """Baseline 4:2:0 color JPEG (Y at 2x2, chroma at 1x1): each MCU
+    carries 4 Y blocks (raster order within the MCU) then Cb then Cr.
+    `y_blocks` is raster order over the FULL Y block grid (2*mcus_x
+    wide); chroma lists are raster over the MCU grid."""
+    return _jpeg_encode_sequential(
+        [y_blocks, cb_blocks, cr_blocks], [(2, 2), (1, 1), (1, 1)],
+        mcus_x * 16, mcus_y * 16, q,
     )
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
+
+
+def _jpeg_bytes(doc_id: int) -> bytes:
+    """Deterministic valid baseline grayscale JPEG per doc: the
+    _flat_blocks closed form."""
+    blocks, w, h = _flat_blocks(doc_id)
+    return _jpeg_encode_gray(blocks, w, h, [16] * 64)
+
+
+def synthesize_jpeg_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, content): deterministic valid grayscale JPEGs."""
+    return _synth_blobs(df, id_col, _jpeg_bytes)
+
+
+def _jpeg_lossless_bytes(doc_id: int) -> bytes:
+    """Structurally valid LOSSLESS (SOF3) JPEG stub with the same dims
+    closed form as _jpeg_bytes. Lossless JPEG is the documented codec
+    boundary — this file exists to exercise the QUARANTINE path
+    (detection + typed routing), so the entropy segment is a minimal
+    placeholder: the marker walk and SOF header are real (jpeg_sof_
+    marker and parse_image_header read them), the sample data is never
+    decoded."""
+    _, w, h = _flat_blocks(doc_id)
+    # SOF3: precision 8, 1 component, 1x1 sampling; lossless frames
+    # carry no quant table (Tq=0 by convention)
+    sof = _jpeg_seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
+    dht = _jpeg_seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
+    # SOS for lossless: predictor selector 1, point transform 0
+    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 0, 0]))
+    return b"\xff\xd8" + dht + sof + sos + b"\x00\x3f" + b"\xff\xd9"
+
+
+def synthesize_jpeg_mixed_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, content): a mixed crawl-shaped corpus — every 5th doc
+    is a lossless SOF3 file (the quarantine class), the rest are the
+    decodable baseline JPEGs of synthesize_jpeg_blobs."""
+    return _synth_blobs(
+        df, id_col, lambda d: _jpeg_lossless_bytes(d) if d % 5 == 0 else _jpeg_bytes(d)
     )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
+
+
+def _jpeg_color_bytes(doc_id: int) -> bytes:
+    """Deterministic valid baseline COLOR JPEG per doc (4:4:4): luma is
+    the _flat_blocks closed form, chroma DCs ZERO (Cb = Cr = 128
+    exactly — neutral), so YCbCr→RGB degenerates to R = G = B = Y with
+    NO rounding ambiguity: the color machinery (3-component SOF/SOS,
+    interleaved MCUs, per-component predictors) is byte-exact
+    verifiable by the same closed form as the grayscale file.
+    Non-neutral chroma conversion is pinned in pytest instead
+    (cross-engine float rounding at .5 would poison a SQL oracle)."""
+    blocks, w, h = _flat_blocks(doc_id)
+    zero = [[0] * 64 for _ in blocks]
+    return _jpeg_encode_color([blocks, zero, zero], w, h, [16] * 64)
+
+
+def synthesize_jpeg_color_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, content): deterministic valid 4:4:4 color JPEGs."""
+    return _synth_blobs(df, id_col, _jpeg_color_bytes)
 
 
 # --- Progressive (SOF2) JPEG decode + encode (r6) ----------------------
-# Closes the last real-crawl image-input class that errored. The scan
-# machinery follows ITU-T T.81 Annex G (spectral selection + successive
-# approximation): DC-first/DC-refine scans (interleaved or single
-# component), AC-first scans with EOB-run coding, AC-refinement scans
-# with zero-history runs and correction bits. Coefficients accumulate
-# across scans in per-component block grids; dequant/IDCT/upsample/
-# color conversion reuse the baseline path's machinery (_jpeg_finish).
-# Huffman progressive, which is what cjpeg/libjpeg -progressive
-# emits, decodes for real here; sequential-arithmetic (SOF9) AND
-# progressive-arithmetic (SOF10) decode via the QM coder sections
-# below (r7). The remaining boundary is lossless (SOF3/SOF11) only.
-
-def _jpeg_pixels_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive JPEG decode: multi-scan marker walk (DHT/DRI
-    may be redefined between scans), per-scan spectral band [Ss,Se] and
-    successive-approximation [Ah,Al] state, EOB-run + refinement-bit
-    entropy decode, then the shared dequant/IDCT/upsample/YCbCr tail.
-    General integer sampling layouts; restart markers reset both DC
-    predictors and the EOB run."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    coefs: list = []  # per comp: int32[bh_full, bw_full, 64] zigzag
-    mcus_x = mcus_y = hmax = vmax = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7:  # stray restart between scans
-            pos += 2
-            continue
-        if pos + 4 > len(data):
-            raise ValueError("truncated JPEG segment")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC4:  # DHT (legal between scans in progressive)
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                n = sum(seg[p + 1 : p + 17])
-                htables[(tc, th)] = _huff_decode_table(bytes(seg[p : p + 17 + n]))
-                p += 17 + n
-        elif marker == 0xC2:  # SOF2
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-            hmax = max(c["hi"] for c in comps)
-            vmax = max(c["vi"] for c in comps)
-            if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-                raise NotImplementedError("non-integer chroma sampling ratios")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                # non-interleaved scans cover the REAL block grid
-                # (ceil of the component's sample dims / 8); interleaved
-                # DC scans cover the MCU-padded full grid
-                cw = (w * c["hi"] + hmax - 1) // hmax
-                ch = (h * c["vi"] + vmax - 1) // vmax
-                c["bw"], c["bh"] = (cw + 7) // 8, (ch + 7) // 8
-                c["pred"] = 0
-                coefs.append(
-                    np.zeros((mcus_y * c["vi"], mcus_x * c["hi"], 64), np.int32)
-                )
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC9, 0xCA, 0xCB):
-            raise ValueError("mixed/unsupported SOF in progressive decode")
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:  # SOS: one progressive scan
-            if not comps:
-                raise ValueError("JPEG SOS before SOF2")
-            ns = seg[0]
-            scan = []
-            by_cid = {c["cid"]: (i, c) for i, c in enumerate(comps)}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                ci, c = by_cid[cid]
-                scan.append((ci, c, tids >> 4, tids & 0x0F))
-            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            r = _BitReader(data, pos + 2 + seglen)
-            _jpeg_decode_prog_scan(
-                r, scan, ss, se, ah, al, htables, coefs,
-                restart_interval, mcus_x, mcus_y,
-            )
-            # advance to the next true marker after the entropy data
-            # (skip stuffed FF00s and any trailing restart markers)
-            p = r.pos
-            while p + 1 < len(data):
-                if data[p] == 0xFF and data[p + 1] not in (0x00,) and not (
-                    0xD0 <= data[p + 1] <= 0xD7
-                ):
-                    break
-                p += 1
-            pos = p
-            continue
-        pos += 2 + seglen
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF2")
-    # reconstruction: dequant + IDCT every block of every component
-    a = _idct_matrix()
-    planes = []
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        q = np.array(qtables[c["tq"]], np.float64)
-        grid = coefs[ci].astype(np.float64) * q  # (bh, bw, 64) dequant
-        bh_full, bw_full = grid.shape[:2]
-        f = np.zeros((bh_full, bw_full, 8, 8))
-        zz_rows = [z // 8 for z in _ZIGZAG]
-        zz_cols = [z % 8 for z in _ZIGZAG]
-        f[:, :, zz_rows, zz_cols] = grid
-        # pixel[i,j] = sum_{u,v} a[u,i] f[u,v] a[v,j] per block, batched
-        # a.T @ f @ a batched over (bh, bw) blocks — identical
-        # contraction order to the baseline per-block path, without
-        # einsum's per-call path search (~20% of the decode profile)
-        px = (a.T @ f) @ a
-        plane = px.transpose(0, 2, 1, 3).reshape(bh_full * 8, bw_full * 8) + 128.0
-        planes.append(plane)
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
+# The scan machinery follows ITU-T T.81 Annex G (spectral selection +
+# successive approximation): DC-first/DC-refine scans (interleaved or
+# single component), AC-first scans with EOB-run coding, AC-refinement
+# scans with zero-history runs and correction bits. Coefficients
+# accumulate across scans in the per-component grids; Huffman
+# progressive is what cjpeg/libjpeg -progressive emits.
 
 
-def _jpeg_decode_prog_scan(
-    r: _BitReader, scan, ss, se, ah, al, htables, coefs,
-    restart_interval, mcus_x, mcus_y,
-):
-    """Decode one progressive scan's entropy data into the coefficient
-    grids. scan = [(ci, comp, td, ta), ...]."""
-    state = {"eobrun": 0}
-
-    def _restart(preds, ordinal):
-        r.n = 0  # byte-align
-        if (
-            r.pos + 2 > len(r.data)
-            or r.data[r.pos] != 0xFF
-            or not 0xD0 <= r.data[r.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected JPEG restart marker")
-        # sequence check (r8): the m-th restart carries RST((m-1) mod 8)
-        want = 0xD0 + (ordinal - 1) % 8
-        if r.data[r.pos + 1] != want:
-            raise ValueError(
-                "JPEG restart marker out of sequence: got "
-                f"RST{r.data[r.pos + 1] - 0xD0}, expected RST{want - 0xD0}"
-            )
-        r.pos += 2
-        for i in range(len(preds)):
-            preds[i] = 0
-        state["eobrun"] = 0
-
-    if ss == 0:  # DC scan (Se must be 0 in progressive)
+def _huff_prog_scan(data: bytes, frame: _JpegFrame, scan: _JpegScan, coefs) -> None:
+    """One progressive scan body into the coefficient grids: DC first
+    (diff-coded at reduced precision) or DC refinement (one raw bit per
+    block), interleaved or not; or a single-component AC first/refine
+    scan over band [Ss,Se]. Restarts reset the DC predictors and the
+    EOB run."""
+    ss, se, ah, al = scan.ss, scan.se, scan.ah, scan.al
+    if ss == 0:
         if se != 0:
             raise ValueError("progressive DC scan with Se != 0")
-        preds = [0] * len(scan)
-        if len(scan) > 1:
-            units = [(my, mx) for my in range(mcus_y) for mx in range(mcus_x)]
-        else:
-            ci, c, td, ta = scan[0]
-            units = [(by, bx) for by in range(c["bh"]) for bx in range(c["bw"])]
-        for ui, unit in enumerate(units):
-            if restart_interval and ui and ui % restart_interval == 0:
-                _restart(preds, ui // restart_interval)
-            if len(scan) > 1:  # interleaved MCU: hi*vi blocks per comp
-                my, mx = unit
-                for si, (ci, c, td, ta) in enumerate(scan):
-                    for byi in range(c["vi"]):
-                        for bxi in range(c["hi"]):
-                            by, bx = my * c["vi"] + byi, mx * c["hi"] + bxi
-                            _dc_prog_block(
-                                r, coefs[ci], by, bx, ah, al, preds, si,
-                                htables, td,
-                            )
-            else:
-                ci, c, td, ta = scan[0]
-                by, bx = unit
-                _dc_prog_block(r, coefs[ci], by, bx, ah, al, preds, 0, htables, td)
-        return
-    # AC scan: single component, non-interleaved
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    ci, c, td, ta = scan[0]
-    ac_tbl = htables.get((1, ta))
-    if ah == 0 and ac_tbl is None:
-        raise ValueError("JPEG missing AC Huffman table for scan")
-    grid = coefs[ci]
-    n = 0
-    for by in range(c["bh"]):
-        for bx in range(c["bw"]):
-            if restart_interval and n and n % restart_interval == 0:
-                _restart([], n // restart_interval)
-            n += 1
-            if ah == 0:
-                _ac_first_block(r, grid, by, bx, ss, se, al, ac_tbl, state)
-            else:
-                if ac_tbl is None:
-                    raise ValueError("JPEG missing AC Huffman table for scan")
-                _ac_refine_block(r, grid, by, bx, ss, se, al, ac_tbl, state)
-
-
-def _dc_prog_block(r, grid, by, bx, ah, al, preds, si, htables, td):
-    if ah == 0:  # first DC scan: diff-coded at reduced precision
-        dc_tbl = htables.get((0, td))
-        if dc_tbl is None:
+        dc_tbls = [scan.tables.get((0, td)) for _, td, _ in scan.comps]
+        if ah == 0 and None in dc_tbls:
             raise ValueError("JPEG missing DC Huffman table for scan")
-        size = r.huff(dc_tbl)
-        diff = _extend(r.bits(size), size) if size else 0
-        preds[si] += diff
-        grid[by, bx, 0] = preds[si] << al
-    else:  # DC refinement: one raw bit per block
-        if r.bit():
-            grid[by, bx, 0] |= 1 << al
+        for start, blocks in _scan_mcus(frame, scan):
+            if start is not None:
+                r = _BitReader(data, start)
+                preds = [0] * len(dc_tbls)
+            for si, by, bx in blocks:
+                blk = coefs[scan.comps[si][0]][by, bx]
+                if ah:
+                    if r.bit():
+                        blk[0] |= 1 << al
+                else:
+                    preds[si] += _dc_diff(r, dc_tbls[si])
+                    blk[0] = preds[si] << al
+        return
+    if len(scan.comps) != 1:
+        raise ValueError("progressive AC scan must be single-component")
+    ci, _, ta = scan.comps[0]
+    ac_tbl = scan.tables.get((1, ta))
+    if ac_tbl is None:
+        raise ValueError("JPEG missing AC Huffman table for scan")
+    decode_band = _ac_refine_block if ah else _ac_first_block
+    state = {"eobrun": 0}
+    for start, blocks in _scan_mcus(frame, scan):
+        if start is not None:
+            r = _BitReader(data, start)
+            state["eobrun"] = 0
+        _, by, bx = blocks[0]
+        decode_band(r, coefs[ci], by, bx, ss, se, al, ac_tbl, state)
 
 
 def _ac_first_block(r, grid, by, bx, ss, se, al, ac_tbl, state):
@@ -2222,6 +2072,7 @@ _JPEG_PROG_SCRIPT = [
 ]
 
 
+
 def _jpeg_encode_progressive(
     comp_blocks: list[list[list[int]]], w: int, h: int, q: list[int]
 ) -> bytes:
@@ -2235,28 +2086,12 @@ def _jpeg_encode_progressive(
     dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _canonical_codes(_JPEG_AC_PROG_BITS, _JPEG_AC_PROG_VALS)
     n_blocks = len(comp_blocks[0])
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_PROG_BITS) + bytes(_JPEG_AC_PROG_VALS),
-    )
-    sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for ci in range(ncomp):
-        sof_body += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC2, sof_body)
+    scans = []
     for kind, comp_sel, ss, se, ah, al in _JPEG_PROG_SCRIPT:
         if kind == "dc":
             sos = bytes([ncomp])
             for ci in range(ncomp):
                 sos += bytes([ci + 1, 0x00])
-            sos += bytes([ss, se, (ah << 4) | al])
-            out += seg(0xDA, sos)
             wtr = _BitWriter()
             if ah == 0:
                 preds = [0] * ncomp
@@ -2275,70 +2110,49 @@ def _jpeg_encode_progressive(
                 for b in range(n_blocks):
                     for ci in range(ncomp):
                         wtr.put((comp_blocks[ci][b][0] >> al) & 1, 1)
-            out += wtr.flush()
+            scans.append((sos + bytes([ss, se, (ah << 4) | al]), wtr.flush()))
         else:
             for ci in range(ncomp):  # AC scans are per-component
-                sos = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
-                out += seg(0xDA, sos)
                 wtr = _BitWriter()
                 state = {"eobrun": 0, "pending": []}
                 enc = _enc_ac_first if ah == 0 else _enc_ac_refine
                 for zz in comp_blocks[ci]:
                     enc(wtr, zz, ss, se, al, ac_codes, state)
                 _flush_eobrun(wtr, state, ac_codes)
-                out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
+                sos = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
+                scans.append((sos, wtr.flush()))
+    return _jpeg_file(
+        0xC2, w, h, [0x11] * ncomp, q,
+        _jpeg_dht(_JPEG_AC_PROG_BITS, _JPEG_AC_PROG_VALS), scans,
+    )
 
 
 def _jpeg_progressive_bytes(doc_id: int) -> bytes:
     """Deterministic valid PROGRESSIVE grayscale JPEG per doc: the
-    same flat-block closed form as _jpeg_bytes (block (bx,by) decodes
-    to exactly 128 + 2*((doc_id+bx+3*by) % 64 - 32) at quant 16), but
-    the DC arrives across two successive-approximation scans and the
-    all-zero AC bands exercise the EOB-run machinery."""
-    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
-    q = [16] * 64
-    blocks = []
-    for by in range(bh):
-        for bx in range(bw):
-            zz = [0] * 64
-            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
-            blocks.append(zz)
-    return _jpeg_encode_progressive([blocks], bw * 8, bh * 8, q)
+    _flat_blocks closed form, but the DC arrives across two
+    successive-approximation scans and the all-zero AC bands exercise
+    the EOB-run machinery."""
+    blocks, w, h = _flat_blocks(doc_id)
+    return _jpeg_encode_progressive([blocks], w, h, [16] * 64)
 
 
 def synthesize_jpeg_progressive_blobs(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, content): deterministic valid progressive JPEGs."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [
-                        _jpeg_progressive_bytes(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _jpeg_progressive_bytes)
 
 
 # --- Arithmetic-coded (SOF9) JPEG decode + encode (r7) --------------------
-# The last compressed-image class that raised NotImplementedError: the
-# QM-coder (ITU-T T.81 Annex E probability-estimation state machine +
-# section F.2 DCT-coefficient conditioning models) implemented for
+# The QM-coder (ITU-T T.81 Annex E probability-estimation state machine
+# + section F.2 DCT-coefficient conditioning models) implemented for
 # real, both directions. Validated two independent ways in
 # tests/test_multimodal.py: self roundtrip at the coefficient level,
 # and — when a C toolchain + libjpeg headers are present — BYTE-EXACT
 # coefficient equality against libjpeg's own arithmetic codec in both
 # directions (our decoder on libjpeg files, libjpeg's decoder on
 # ours), across grayscale/4:4:4/4:2:0/odd-dims/restart-interval gold
-# files. With SOF10 decoded below (r7, late), the remaining library
-# boundary is lossless (SOF3/SOF11) only.
+# files.
 
 # ITU-T T.81 Table D.3: (Qe, NMPS, NLPS, SWITCH) for the 113 states,
 # plus the non-adapting equiprobable bin (index 113) used for AC sign
@@ -2549,18 +2363,32 @@ def _qm_decode_dc(dec, st, ctx, cond):
     return (-v if sign else v), ctx
 
 
-def _qm_decode_ac(dec, st, fixed, zz, kx):
-    """All AC coefficients of one block (T.81 F.2.4.2) into zz[1..63]."""
-    k = 1
-    while k <= 63:
+
+def _qm_stats() -> tuple[list[bytearray], list[bytearray], bytearray]:
+    """Fresh QM statistics areas — DC and AC per table id, plus the
+    fixed equiprobable sign bin — as every scan and every restart
+    interval starts with."""
+    return (
+        [bytearray(64) for _ in range(4)],
+        [bytearray(256) for _ in range(4)],
+        bytearray([_QM_FIXED_BIN]),
+    )
+
+
+def _qm_decode_ac(dec, st, fixed, blk, kx, ss=1, se=63, al=0):
+    """AC coefficients ss..se of one block (T.81 F.2.4.2), scaled by
+    2^al, into blk — a sequential block's whole band, or a progressive
+    AC-first scan's band (G.2: the same model, band-bounded)."""
+    k = ss
+    while k <= se:
         base = 3 * (k - 1)
         if dec.decode(st, base):
             return  # EOB
         while dec.decode(st, base + 1) == 0:
             k += 1
             base += 3
-            if k > 63:
-                raise ValueError("arithmetic JPEG: AC run past k=63")
+            if k > se:
+                raise ValueError("arithmetic JPEG: AC run past Se")
         sign = dec.decode(fixed, 0)
         stx = base + 2
         m = dec.decode(st, stx)
@@ -2581,168 +2409,31 @@ def _qm_decode_ac(dec, st, fixed, zz, kx):
                 v |= mm
             mm >>= 1
         v += 1
-        zz[k] = -v if sign else v
+        blk[k] = (-v if sign else v) << al
         k += 1
 
 
-def _jpeg_pixels_arith(data: bytes) -> tuple[int, int, bytes]:
-    """REAL arithmetic-coded JPEG decode (SOF9, extended sequential):
-    marker walk (DQT/DAC/DRI/SOF9/SOS), QM entropy decode of the DCT
-    coefficients with the spec's DC/AC conditioning models, then the
-    same dequant → IDCT → upsample → color-convert tail as baseline
-    (_jpeg_finish). Grayscale and color at any integer sampling layout,
-    restart markers included (restart resets the coder, the statistics
-    areas, and the DC predictors, per F.1.4.correspondence). Validated
-    byte-exact against libjpeg's arithmetic codec in
-    tests/test_multimodal.py."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_cond = {t: (0, 1) for t in range(4)}  # DAC defaults: L=0, U=1
-    ac_cond = {t: 5 for t in range(4)}  # Kx = 5
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            raise ValueError("JPEG has no scan data")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC9:  # SOF9
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            p = 0
-            while p < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 0x0F
-                cs = seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                else:
-                    ac_cond[tb] = cs
-                p += 2
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            ns = seg[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved scans unsupported")
-            by_cid = {c["cid"]: c for c in comps}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                by_cid[cid]["dc"], by_cid[cid]["ac"] = tids >> 4, tids & 0x0F
-            pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF9")
-    for c in comps:
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        c["q"] = qtables[c["tq"]]
-    a = _idct_matrix()
-    hmax = max(c["hi"] for c in comps)
-    vmax = max(c["vi"] for c in comps)
-    if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-        raise NotImplementedError("non-integer chroma sampling ratios")
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * 8 * c["vi"], mcus_x * 8 * c["hi"])) for c in comps
-    ]
-
-    def fresh():
-        return (
-            {t: bytearray(64) for t in range(4)},
-            {t: bytearray(256) for t in range(4)},
-            bytearray([_QM_FIXED_BIN]),
-        )
-
-    dc_stats, ac_stats, fixed = fresh()
-    dec = _QMDecoder(data, pos)
-    dc_ctx = [0] * len(comps)
-    last_dc = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                # RSTn: the coder, the statistics areas, and the DC
-                # predictors all reset. The decoder either stopped AT
-                # the marker (it consumed the 0xFF and holds Dn) or
-                # unconsumed flush bytes remain before it — scan.
-                if dec.marker is not None and 0xD0 <= dec.marker <= 0xD7:
-                    rst, p2 = dec.marker, dec.pos + 1
-                else:
-                    p = dec.pos
-                    while p + 1 < len(data) and not (
-                        data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-                    ):
-                        p += 1
-                    if p + 1 >= len(data):
-                        raise ValueError("expected JPEG restart marker")
-                    rst, p2 = data[p + 1], p + 2
-                # RSTn sequence check (r7 ADVICE): a dropped/duplicated
-                # restart segment in a corrupt file must raise, not
-                # resync to the wrong marker and decode garbage
-                # silently — libjpeg's behavior. The m-th restart
-                # (1-based) carries marker RST((m-1) mod 8).
-                want = 0xD0 + (mcu_count // restart_interval - 1) % 8
-                if rst != want:
-                    raise ValueError(
-                        f"JPEG restart marker out of sequence: got RST{rst - 0xD0}, "
-                        f"expected RST{want - 0xD0}"
-                    )
-                dec = _QMDecoder(data, p2)
-                dc_stats, ac_stats, fixed = fresh()
-                dc_ctx = [0] * len(comps)
-                last_dc = [0] * len(comps)
-            mcu_count += 1
-            for ci, c in enumerate(comps):
-                for byi in range(c["vi"]):
-                    for bxi in range(c["hi"]):
-                        zz = [0] * 64
-                        diff, dc_ctx[ci] = _qm_decode_dc(
-                            dec, dc_stats[c["dc"]], dc_ctx[ci], dc_cond[c["dc"]]
-                        )
-                        last_dc[ci] += diff
-                        zz[0] = last_dc[ci]
-                        _qm_decode_ac(
-                            dec, ac_stats[c["ac"]], fixed, zz, ac_cond[c["ac"]]
-                        )
-                        f = np.zeros((8, 8))
-                        for i in range(64):
-                            f[_ZIGZAG[i] // 8, _ZIGZAG[i] % 8] = zz[i] * c["q"][i]
-                        y0 = (my * c["vi"] + byi) * 8
-                        x0 = (mx * c["hi"] + bxi) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = a.T @ f @ a + 128.0
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
+def _qm_seq_scan(data: bytes, frame: _JpegFrame, scan: _JpegScan, coefs) -> None:
+    """Sequential-arithmetic (SOF9) scan body: QM-coded DC differences
+    and AC coefficients under the scan's DAC conditioning. Each restart
+    interval starts a fresh coder, fresh statistics areas and zeroed DC
+    predictors and contexts (T.81 F.1.4.4.1.1)."""
+    for start, blocks in _scan_mcus(frame, scan):
+        if start is not None:
+            dec = _QMDecoder(data, start)
+            dc_stats, ac_stats, fixed = _qm_stats()
+            dc_ctx = [0] * len(scan.comps)
+            last_dc = [0] * len(scan.comps)
+        for si, by, bx in blocks:
+            ci, td, ta = scan.comps[si]
+            zz = [0] * 64
+            diff, dc_ctx[si] = _qm_decode_dc(
+                dec, dc_stats[td], dc_ctx[si], scan.tables[(0, td)]
+            )
+            last_dc[si] += diff
+            zz[0] = last_dc[si]
+            _qm_decode_ac(dec, ac_stats[ta], fixed, zz, scan.tables[(1, ta)])
+            coefs[ci][by, bx] = zz
 
 
 def _qm_encode_dc(enc, st, ctx, diff, cond):
@@ -2831,13 +2522,18 @@ def _qm_encode_ac(enc, st, fixed, zz, kx):
         enc.encode(st, 3 * (k - 1), 1)  # EOB
 
 
+
+# Default arithmetic conditioning, spelled explicitly: DC L=0,U=1; AC Kx=5.
+_JPEG_DAC = _jpeg_seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
+
+
 def _jpeg_encode_arith_gray(
     blocks_zz: list[list[int]], w: int, h: int, q: list[int]
 ) -> bytes:
     """Assemble a valid extended-sequential ARITHMETIC (SOF9) grayscale
-    JPEG from quantized zigzag blocks (raster order): DQT + SOF9 + DAC
-    (default conditioning, spelled explicitly) + SOS + QM-coded entropy
-    data. libjpeg decodes the output byte-exactly (cross-codec test)."""
+    JPEG from quantized zigzag blocks (raster order): DQT + DAC +
+    SOF9 + SOS + QM-coded entropy data. libjpeg decodes the output
+    byte-exactly (cross-codec test)."""
     enc = _QMEncoder()
     dc_stats = bytearray(64)
     ac_stats = bytearray(256)
@@ -2847,51 +2543,22 @@ def _jpeg_encode_arith_gray(
         ctx = _qm_encode_dc(enc, dc_stats, ctx, zz[0] - last, (0, 1))
         last = zz[0]
         _qm_encode_ac(enc, ac_stats, fixed, zz, 5)
-    entropy = enc.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(0xC9, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))  # DC: L=0,U=1; AC: Kx=5
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+    scan = (bytes([1, 1, 0x00, 0, 63, 0]), enc.flush())
+    return _jpeg_file(0xC9, w, h, [0x11], q, _JPEG_DAC, [scan])
 
 
 def _jpeg_arith_bytes(doc_id: int) -> bytes:
     """Deterministic valid ARITHMETIC-coded grayscale JPEG per doc:
-    the same flat-DC-block closed form as _jpeg_bytes (quant 16 makes
-    the decode byte-exact), entropy-coded by the QM coder instead of
-    Huffman — so the existing baseline oracle verifies this decoder's
-    whole pipeline too."""
-    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
-    q = [16] * 64
-    blocks = []
-    for by in range(bh):
-        for bx in range(bw):
-            zz = [0] * 64
-            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
-            blocks.append(zz)
-    return _jpeg_encode_arith_gray(blocks, bw * 8, bh * 8, q)
+    the _flat_blocks closed form entropy-coded by the QM coder instead
+    of Huffman — so the existing baseline oracle verifies this
+    decoder's whole pipeline too."""
+    blocks, w, h = _flat_blocks(doc_id)
+    return _jpeg_encode_arith_gray(blocks, w, h, [16] * 64)
 
 
 def synthesize_jpeg_arith_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content): deterministic valid arithmetic-coded JPEGs."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_jpeg_arith_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+    return _synth_blobs(df, id_col, _jpeg_arith_bytes)
 
 
 # --- Progressive-arithmetic (SOF10) JPEG decode + encode (r7, late) -------
@@ -2906,318 +2573,71 @@ def synthesize_jpeg_arith_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFr
 # ones). Statistics areas and the coder reset at every scan and at
 # every restart marker. Validated byte-exact against libjpeg
 # (jpeg_simple_progression + arith_code) across gray/4:4:4/4:2:0/
-# odd-dims/restart gold files in tests/test_multimodal.py. With this,
-# the only JPEG classes left out of scope are the lossless modes
-# (SOF3/SOF11).
+# odd-dims/restart gold files in tests/test_multimodal.py.
 
 
-def _qm_prog_scan(
-    data, pos, comps, scomps, coefs, ss, se, ah, al,
-    dc_cond, ac_cond, restart_interval, mcus_x, mcus_y,
-):
-    """Decode one progressive-arithmetic scan into the zigzag-indexed
-    coefficient grids; returns the stream position of the next marker."""
-    def fresh():
-        return (
-            {t: bytearray(64) for t in range(4)},
-            {t: bytearray(256) for t in range(4)},
-            bytearray([_QM_FIXED_BIN]),
-        )
-
-    dc_stats, ac_stats, fixed = fresh()
-    dec = _QMDecoder(data, pos)
-    dc_ctx = {ci: 0 for ci, *_ in scomps}
-    last_dc = {ci: 0 for ci, *_ in scomps}
-
-    def dc_first(ci, dtbl, blk):
-        diff, dc_ctx[ci] = _qm_decode_dc(
-            dec, dc_stats[dtbl], dc_ctx[ci], dc_cond[dtbl]
-        )
-        last_dc[ci] += diff
-        blk[0] = last_dc[ci] << al
-
-    def dc_refine(blk):
-        if dec.decode(fixed, 0):
-            blk[0] |= 1 << al
-
-    def ac_first(atbl, blk):
-        st = ac_stats[atbl]
-        kx = ac_cond[atbl]
-        k = ss
-        while k <= se:
-            base = 3 * (k - 1)
-            if dec.decode(st, base):
-                return  # EOB
-            while dec.decode(st, base + 1) == 0:
-                k += 1
-                base += 3
-                if k > se:
-                    raise ValueError("arithmetic JPEG: AC run past Se")
-            sign = dec.decode(fixed, 0)
-            stx = base + 2
-            m = dec.decode(st, stx)
-            if m:
-                if dec.decode(st, stx):
-                    m = 2
-                    stx = 189 if k <= kx else 217
-                    while dec.decode(st, stx):
-                        m <<= 1
-                        if m == 0x8000:
-                            raise ValueError("arithmetic JPEG: AC overflow")
-                        stx += 1
-            v = m
-            stx += 14
-            mm = m >> 1
-            while mm:
-                if dec.decode(st, stx):
-                    v |= mm
-                mm >>= 1
-            v += 1
-            blk[k] = (-v if sign else v) << al
-            k += 1
-
-    def ac_refine(atbl, blk):
-        st = ac_stats[atbl]
-        p1 = 1 << al
-        m1 = -1 << al
-        kex = 0
-        for kk in range(se, 0, -1):
-            if blk[kk]:
-                kex = kk
-                break
-        k = ss
-        while k <= se:
-            base = 3 * (k - 1)
-            if k > kex and dec.decode(st, base):
-                return  # EOB past the previous pass's end-of-block
-            while True:
-                cur = int(blk[k])
-                if cur:
-                    if dec.decode(st, base + 2):
-                        blk[k] = cur + (m1 if cur < 0 else p1)
-                    break
-                if dec.decode(st, base + 1):
-                    blk[k] = m1 if dec.decode(fixed, 0) else p1
-                    break
-                base += 3
-                k += 1
-                if k > se:
-                    raise ValueError("arithmetic JPEG: refine run past Se")
-            k += 1
-
-    n = 0
-
-    def maybe_restart():
-        nonlocal dec, dc_stats, ac_stats, fixed
-        if not (restart_interval and n and n % restart_interval == 0):
-            return
-        if dec.marker is not None and 0xD0 <= dec.marker <= 0xD7:
-            rst, p2 = dec.marker, dec.pos + 1
-        else:
-            p = dec.pos
-            while p + 1 < len(data) and not (
-                data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-            ):
-                p += 1
-            if p + 1 >= len(data):
-                raise ValueError("expected JPEG restart marker")
-            rst, p2 = data[p + 1], p + 2
-        # RSTn sequence check (r7 ADVICE): raise on a dropped or
-        # duplicated restart segment instead of silently resyncing —
-        # the m-th restart (1-based) carries RST((m-1) mod 8)
-        want = 0xD0 + (n // restart_interval - 1) % 8
-        if rst != want:
-            raise ValueError(
-                f"JPEG restart marker out of sequence: got RST{rst - 0xD0}, "
-                f"expected RST{want - 0xD0}"
-            )
-        dec = _QMDecoder(data, p2)
-        dc_stats, ac_stats, fixed = fresh()
-        for ci in dc_ctx:
-            dc_ctx[ci] = 0
-            last_dc[ci] = 0
-
-    if ss == 0:  # DC scan (Se must be 0)
-        if se != 0:
-            raise ValueError("progressive DC scan with Se != 0")
-        if len(scomps) > 1:  # interleaved over the MCU grid
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    n += 1
-                    for ci, c, dtbl, _atbl in scomps:
-                        for byi in range(c["vi"]):
-                            for bxi in range(c["hi"]):
-                                blk = coefs[ci][my * c["vi"] + byi, mx * c["hi"] + bxi]
-                                if ah == 0:
-                                    dc_first(ci, dtbl, blk)
-                                else:
-                                    dc_refine(blk)
-        else:
-            ci, c, dtbl, _atbl = scomps[0]
-            for br in range(c["bh"]):
-                for bc in range(c["bw"]):
-                    maybe_restart()
-                    n += 1
-                    if ah == 0:
-                        dc_first(ci, dtbl, coefs[ci][br, bc])
-                    else:
-                        dc_refine(coefs[ci][br, bc])
-    else:  # AC scan: single-component by spec
-        if len(scomps) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        ci, c, _dtbl, atbl = scomps[0]
-        for br in range(c["bh"]):
-            for bc in range(c["bw"]):
-                maybe_restart()
-                n += 1
-                if ah == 0:
-                    ac_first(atbl, coefs[ci][br, bc])
-                else:
-                    ac_refine(atbl, coefs[ci][br, bc])
-    # next true marker after this scan's entropy data
-    if dec.marker is not None and dec.marker != 0xD9:
-        return dec.pos - 1 if data[dec.pos - 1] == 0xFF else dec.pos
-    p = dec.pos
-    while p + 1 < len(data) and not (
-        data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF)
-    ):
-        p += 1
-    return p
-
-
-def _jpeg_arith_prog_coefs(data: bytes):
-    """The SOF10 marker walk + QM scan decode, stopping at the
-    coefficient level: returns (coefs, comps, w, h, qtables, hmax,
-    vmax) with coefs[ci] an int32[bh, bw, 64] zigzag-indexed grid —
-    exposed separately so tests can compare coefficients byte-exact
-    against libjpeg's dump (pixel space would blur the comparison
-    through two different IDCT roundings)."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_cond = {t: (0, 1) for t in range(4)}
-    ac_cond = {t: 5 for t in range(4)}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    coefs: list = []
-    mcus_x = mcus_y = hmax = vmax = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
+def _qm_refine_ac(dec, st, fixed, blk, ss, se, al):
+    """AC refinement (Ah=Al+1) of band ss..se of one block (T.81 G.2.3)."""
+    p1 = 1 << al
+    m1 = -1 << al
+    kex = 0
+    for kk in range(se, 0, -1):
+        if blk[kk]:
+            kex = kk
             break
-        if 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if pos + 4 > len(data):
-            raise ValueError("truncated JPEG segment")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xCA:  # SOF10
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-            hmax = max(c["hi"] for c in comps)
-            vmax = max(c["vi"] for c in comps)
-            if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-                raise NotImplementedError("non-integer chroma sampling ratios")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                cw = (w * c["hi"] + hmax - 1) // hmax
-                ch = (h * c["vi"] + vmax - 1) // vmax
-                c["bw"], c["bh"] = (cw + 7) // 8, (ch + 7) // 8
-                coefs.append(
-                    np.zeros((mcus_y * c["vi"], mcus_x * c["hi"], 64), np.int32)
+    k = ss
+    while k <= se:
+        base = 3 * (k - 1)
+        if k > kex and dec.decode(st, base):
+            return  # EOB past the previous pass's end-of-block
+        while True:
+            cur = int(blk[k])
+            if cur:
+                if dec.decode(st, base + 2):
+                    blk[k] = cur + (m1 if cur < 0 else p1)
+                break
+            if dec.decode(st, base + 1):
+                blk[k] = m1 if dec.decode(fixed, 0) else p1
+                break
+            base += 3
+            k += 1
+            if k > se:
+                raise ValueError("arithmetic JPEG: refine run past Se")
+        k += 1
+
+
+def _qm_prog_scan(data: bytes, frame: _JpegFrame, scan: _JpegScan, coefs) -> None:
+    """One progressive-arithmetic scan body into the coefficient grids:
+    DC first or refinement (interleaved or not), or a single-component
+    AC first/refine scan. Each restart interval starts a fresh coder,
+    fresh statistics areas and zeroed DC predictors and contexts."""
+    ss, se, ah, al = scan.ss, scan.se, scan.ah, scan.al
+    if ss == 0 and se != 0:
+        raise ValueError("progressive DC scan with Se != 0")
+    if ss and len(scan.comps) != 1:
+        raise ValueError("progressive AC scan must be single-component")
+    for start, blocks in _scan_mcus(frame, scan):
+        if start is not None:
+            dec = _QMDecoder(data, start)
+            dc_stats, ac_stats, fixed = _qm_stats()
+            dc_ctx = [0] * len(scan.comps)
+            last_dc = [0] * len(scan.comps)
+        for si, by, bx in blocks:
+            ci, td, ta = scan.comps[si]
+            blk = coefs[ci][by, bx]
+            if ss == 0 and ah == 0:
+                diff, dc_ctx[si] = _qm_decode_dc(
+                    dec, dc_stats[td], dc_ctx[si], scan.tables[(0, td)]
                 )
-        elif marker == 0xCC:
-            p = 0
-            while p < len(seg):
-                tc, tb, cs = seg[p] >> 4, seg[p] & 0x0F, seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                else:
-                    ac_cond[tb] = cs
-                p += 2
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCB):
-            raise ValueError("mixed/unsupported SOF in progressive-arithmetic decode")
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            if not comps:
-                raise ValueError("JPEG SOS before SOF10")
-            ns = seg[0]
-            scomps = []
-            by_cid = {c["cid"]: (i, c) for i, c in enumerate(comps)}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                ci, c = by_cid[cid]
-                scomps.append((ci, c, tids >> 4, tids & 0x0F))
-            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            pos = _qm_prog_scan(
-                data, pos + 2 + seglen, comps, scomps, coefs, ss, se,
-                ahal >> 4, ahal & 0x0F, dc_cond, ac_cond,
-                restart_interval, mcus_x, mcus_y,
-            )
-            continue
-        pos += 2 + seglen
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF10")
-    return coefs, comps, w, h, qtables, hmax, vmax
-
-
-def _jpeg_pixels_arith_prog(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive-arithmetic (SOF10) JPEG decode: the SOF2 scan
-    walk with QM-coded scan bodies (see the section comment above for
-    the G.2 model mapping), then the shared batched dequant/IDCT/
-    upsample/YCbCr tail."""
-    import numpy as np
-
-    coefs, comps, w, h, qtables, hmax, vmax = _jpeg_arith_prog_coefs(data)
-    a = _idct_matrix()
-    planes = []
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        q = np.array(qtables[c["tq"]], np.float64)
-        grid = coefs[ci].astype(np.float64) * q
-        bh_full, bw_full = grid.shape[:2]
-        f = np.zeros((bh_full, bw_full, 8, 8))
-        zz_rows = [z // 8 for z in _ZIGZAG]
-        zz_cols = [z % 8 for z in _ZIGZAG]
-        f[:, :, zz_rows, zz_cols] = grid
-        # a.T @ f @ a batched over (bh, bw) blocks — identical
-        # contraction order to the baseline per-block path, without
-        # einsum's per-call path search (~20% of the decode profile)
-        px = (a.T @ f) @ a
-        planes.append(
-            px.transpose(0, 2, 1, 3).reshape(bh_full * 8, bw_full * 8) + 128.0
-        )
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
+                last_dc[si] += diff
+                blk[0] = last_dc[si] << al
+            elif ss == 0:
+                if dec.decode(fixed, 0):
+                    blk[0] |= 1 << al
+            elif ah == 0:
+                _qm_decode_ac(dec, ac_stats[ta], fixed, blk, scan.tables[(1, ta)], ss, se, al)
+            else:
+                _qm_refine_ac(dec, ac_stats[ta], fixed, blk, ss, se, al)
 
 
 def _jpeg_encode_arith_prog_gray(
@@ -3230,14 +2650,7 @@ def _jpeg_encode_arith_prog_gray(
     AC model. (An AC-refinement ENCODER is deliberately out of scope:
     the decode path for it is pinned by the libjpeg gold files, whose
     jpeg_simple_progression script emits AC refinement scans.)"""
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(0xCA, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
-
+    scans = []
     # scan 1: DC first, Al=1 (codes diffs of DC>>1)
     enc = _QMEncoder()
     dc_stats = bytearray(64)
@@ -3246,16 +2659,14 @@ def _jpeg_encode_arith_prog_gray(
         v = zz[0] >> 1  # arithmetic shift matches the decoder's <<1 + refine bit
         ctx = _qm_encode_dc(enc, dc_stats, ctx, v - last, (0, 1))
         last = v
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01]))
-    out += enc.flush()
+    scans.append((bytes([1, 1, 0x00, 0, 0, 0x01]), enc.flush()))
 
     # scan 2: DC refinement, Ah=1 Al=0 (one fixed-bin bit per block)
     enc = _QMEncoder()
     fixed = bytearray([_QM_FIXED_BIN])
     for zz in blocks_zz:
         enc.encode(fixed, 0, zz[0] & 1)
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10]))
-    out += enc.flush()
+    scans.append((bytes([1, 1, 0x00, 0, 0, 0x10]), enc.flush()))
 
     # scan 3: AC first, band 1..63, Al=0
     enc = _QMEncoder()
@@ -3263,40 +2674,30 @@ def _jpeg_encode_arith_prog_gray(
     fixed = bytearray([_QM_FIXED_BIN])
     for zz in blocks_zz:
         _qm_encode_ac(enc, ac_stats, fixed, zz, 5)
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
-    out += enc.flush()
-
-    out += b"\xff\xd9"
-    return bytes(out)
+    scans.append((bytes([1, 1, 0x00, 1, 63, 0x00]), enc.flush()))
+    return _jpeg_file(0xCA, w, h, [0x11], q, _JPEG_DAC, scans)
 
 
 def _jpeg_arith_prog_bytes(doc_id: int) -> bytes:
     """Deterministic valid PROGRESSIVE-ARITHMETIC (SOF10) grayscale
-    JPEG per doc: the same flat-DC closed form as _jpeg_bytes, coded
-    across three QM scans (DC first Al=1, DC refinement, AC first) —
-    the DC arrives over two successive-approximation scans, so the
-    oracle hash pins the refinement reassembly too."""
-    bw, bh = 1 + doc_id % 3, 1 + doc_id % 2
-    q = [16] * 64
-    blocks = []
-    for by in range(bh):
-        for bx in range(bw):
-            zz = [0] * 64
-            zz[0] = (doc_id + bx + 3 * by) % 64 - 32
-            blocks.append(zz)
-    return _jpeg_encode_arith_prog_gray(blocks, bw * 8, bh * 8, q)
+    JPEG per doc: the _flat_blocks closed form, coded across three QM
+    scans (DC first Al=1, DC refinement, AC first) — the DC arrives
+    over two successive-approximation scans, so the oracle hash pins
+    the refinement reassembly too."""
+    blocks, w, h = _flat_blocks(doc_id)
+    return _jpeg_encode_arith_prog_gray(blocks, w, h, [16] * 64)
 
 
 def synthesize_jpeg_arith_prog_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content): deterministic valid SOF10 JPEGs."""
+    return _synth_blobs(df, id_col, _jpeg_arith_prog_bytes)
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_jpeg_arith_prog_bytes(int(i)) for i in pdf[id_col]],
-                }
-            )
 
-    return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
+# The frame types _jpeg_coefs decodes, each with its scan-body decoder;
+# every other SOFn is the codec boundary (quarantine-routable).
+_JPEG_SCAN_DECODERS = {
+    0xC0: _huff_seq_scan,
+    0xC2: _huff_prog_scan,
+    0xC9: _qm_seq_scan,
+    0xCA: _qm_prog_scan,
+}

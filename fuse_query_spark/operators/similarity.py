@@ -595,7 +595,7 @@ def _random_projection_arrow(
     NULL, has length != in_dim, or contains a NULL element projects to
     all-NULL (the JVM fold yields NULL for exactly those rows).
     FQ_RP_ARROW_DISABLE=1 restores the JVM Column path (measurement
-    kill-switch, same class as FQ_SPREAD_DISABLE/FQ_FUSE_DISABLE)."""
+    kill-switch, same class as FQ_SPREAD_DISABLE)."""
     import numpy as np
 
     signs = _rademacher_signs(in_dim, out_dim)

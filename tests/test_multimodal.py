@@ -1017,99 +1017,23 @@ class TestJpegArithmeticDecode:
         return out
 
     def _my_coefs(self, jpg):
-        """Walk a SOF9 file with the production QM primitives and
-        return per-component {(block_row, block_col): natural-order
-        coefficients} — the same representation libjpeg dumps."""
-        import struct as _struct
+        """The production coefficient decode (_jpeg_coefs: header model,
+        restart intervals, QM scan bodies) as per-component
+        {(block_row, block_col): natural-order coefficients} — the same
+        representation libjpeg dumps."""
+        from fuse_query_spark.operators.multimodal import _ZIGZAG, _jpeg_coefs
 
-        from fuse_query_spark.operators.multimodal import (
-            _QM_FIXED_BIN,
-            _QMDecoder,
-            _ZIGZAG,
-            _qm_decode_ac,
-            _qm_decode_dc,
-        )
-
-        pos = 2
-        comps, dc_cond, ac_cond, ri = [], {t: (0, 1) for t in range(4)}, {t: 5 for t in range(4)}, 0
-        w = h = None
-        while True:
-            marker = jpg[pos + 1]
-            seglen = _struct.unpack(">H", jpg[pos + 2 : pos + 4])[0]
-            seg = jpg[pos + 4 : pos + 2 + seglen]
-            if marker == 0xC9:
-                h, w = _struct.unpack(">HH", seg[1:5])
-                for ci in range(seg[5]):
-                    cid, sampling, _tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                    comps.append({"cid": cid, "hi": sampling >> 4, "vi": sampling & 15})
-            elif marker == 0xCC:
-                p = 0
-                while p < len(seg):
-                    tc, tb, cs = seg[p] >> 4, seg[p] & 15, seg[p + 1]
-                    if tc == 0:
-                        dc_cond[tb] = (cs & 15, cs >> 4)
-                    else:
-                        ac_cond[tb] = cs
-                    p += 2
-            elif marker == 0xDD:
-                ri = _struct.unpack(">H", seg[:2])[0]
-            elif marker == 0xDA:
-                by_cid = {c["cid"]: c for c in comps}
-                for si in range(seg[0]):
-                    cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                    by_cid[cid]["dc"], by_cid[cid]["ac"] = tids >> 4, tids & 15
-                pos += 2 + seglen
-                break
-            pos += 2 + seglen
-        hmax = max(c["hi"] for c in comps)
-        vmax = max(c["vi"] for c in comps)
-        mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-        mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-        def fresh():
-            return (
-                {t: bytearray(64) for t in range(4)},
-                {t: bytearray(256) for t in range(4)},
-                bytearray([_QM_FIXED_BIN]),
-            )
-
-        dc_stats, ac_stats, fixed = fresh()
-        dec = _QMDecoder(jpg, pos)
-        dc_ctx = [0] * len(comps)
-        last_dc = [0] * len(comps)
-        grids = [dict() for _ in comps]
-        n = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if ri and n and n % ri == 0:
-                    if dec.marker is not None and 0xD0 <= dec.marker <= 0xD7:
-                        p2 = dec.pos + 1
-                    else:
-                        p = dec.pos
-                        while not (jpg[p] == 0xFF and 0xD0 <= jpg[p + 1] <= 0xD7):
-                            p += 1
-                        p2 = p + 2
-                    dec = _QMDecoder(jpg, p2)
-                    dc_stats, ac_stats, fixed = fresh()
-                    dc_ctx = [0] * len(comps)
-                    last_dc = [0] * len(comps)
-                n += 1
-                for ci, c in enumerate(comps):
-                    for byi in range(c["vi"]):
-                        for bxi in range(c["hi"]):
-                            zz = [0] * 64
-                            diff, dc_ctx[ci] = _qm_decode_dc(
-                                dec, dc_stats[c["dc"]], dc_ctx[ci], dc_cond[c["dc"]]
-                            )
-                            last_dc[ci] += diff
-                            zz[0] = last_dc[ci]
-                            _qm_decode_ac(
-                                dec, ac_stats[c["ac"]], fixed, zz, ac_cond[c["ac"]]
-                            )
-                            nat = [0] * 64
-                            for k in range(64):
-                                nat[_ZIGZAG[k]] = zz[k]
-                            grids[ci][(my * c["vi"] + byi, mx * c["hi"] + bxi)] = nat
+        _frame, coefs = _jpeg_coefs(jpg)
+        grids = []
+        for grid in coefs:
+            out = {}
+            for br in range(grid.shape[0]):
+                for bc in range(grid.shape[1]):
+                    nat = [0] * 64
+                    for k in range(64):
+                        nat[_ZIGZAG[k]] = int(grid[br, bc, k])
+                    out[(br, bc)] = nat
+            grids.append(out)
         return grids
 
     @pytest.mark.parametrize(
@@ -1225,13 +1149,11 @@ class TestJpegProgressiveArithmeticDecode:
         progressive-arithmetic files (jpeg_simple_progression script:
         DC successive approximation, banded AC-first scans, AC
         refinement scans) equals libjpeg's own dump byte-for-byte."""
-        from fuse_query_spark.operators.multimodal import (
-            _ZIGZAG,
-            _jpeg_arith_prog_coefs,
-        )
+        from fuse_query_spark.operators.multimodal import _ZIGZAG, _jpeg_coefs
 
         jpg = self._gold_prog(harness, w, h, ncomp, sub, restart)
-        coefs, comps, ww, hh, _q, _hm, _vm = _jpeg_arith_prog_coefs(jpg)
+        frame, coefs = _jpeg_coefs(jpg)
+        ww, hh = frame.w, frame.h
         assert (ww, hh) == (w, h)
         ref = TestJpegArithmeticDecode._ref_coefs(self, harness, jpg)
         for ci, grid in enumerate(ref):
@@ -1366,6 +1288,46 @@ class TestJpegQuarantine:
         assert jpeg_sof_marker(_jpeg_lossless_bytes(1)) == 0xC3
         assert jpeg_sof_marker(b"not a jpeg") is None
 
+    def test_sof13_to_sof15_get_dims_and_typed_reason(self, spark):
+        """Every SOFn the classifier knows is read by the one header
+        walk: the hierarchical arithmetic frames (SOF13/14) and the
+        lossless one (SOF15) get image/jpeg dims and their typed
+        quarantine reason, not the unknown-bytes fallback."""
+        import pandas as pd
+
+        from fuse_query_spark.operators.multimodal import (
+            _jpeg_lossless_bytes,
+            image_pixel_stats_quarantine,
+            parse_image_header,
+        )
+
+        stubs = {
+            m: _jpeg_lossless_bytes(4).replace(b"\xff\xc3", bytes([0xFF, m]))
+            for m in (0xCD, 0xCE, 0xCF)
+        }
+        for b in stubs.values():
+            assert parse_image_header(b) == (16, 8, "image/jpeg")
+
+        def _gen(batches):
+            for pdf in batches:
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pdf["doc_id"],
+                        "content": [stubs[int(m)] for m in pdf["doc_id"]],
+                    }
+                )
+
+        docs = spark.createDataFrame([(m,) for m in stubs], "doc_id LONG")
+        blobs = docs.mapInPandas(_gen, "doc_id LONG, content BINARY")
+        rows = {r.doc_id: r for r in image_pixel_stats_quarantine(blobs).collect()}
+        assert {m: r.reason for m, r in rows.items()} == {
+            0xCD: "jpeg-sof13-unsupported",
+            0xCE: "jpeg-sof14-unsupported",
+            0xCF: "jpeg-sof15-lossless",
+        }
+        for r in rows.values():
+            assert (r.status, r.width, r.height) == ("quarantined", 16, 8)
+
     def test_direct_decode_still_raises(self):
         """The strict path keeps raising — quarantine is opt-in, a
         curation pipeline that wants failure semantics keeps them."""
@@ -1470,6 +1432,111 @@ def test_quarantine_catches_corrupt_supported_formats(spark):
     assert rows[0].status == "quarantined" and rows[0].reason
     assert rows[1].status == "quarantined" and rows[1].reason
     assert rows[2].status == "decoded" and rows[2].pixel_sum > 0
+
+
+def test_corrupt_jpegs_raise_only_quarantined_types():
+    """Every prefix truncation plus seeded random single-byte flips of
+    each synthesized JPEG kind: _jpeg_pixels decodes or raises one of
+    the four exception types image_pixel_stats_quarantine catches — one
+    corrupt crawl file must not fail the whole Python stage (an SOS
+    table selector >= 4 in an arithmetic file used to escape as
+    KeyError)."""
+    import random
+    import struct as _struct
+
+    from fuse_query_spark.operators.multimodal import (
+        _jpeg_arith_bytes,
+        _jpeg_arith_prog_bytes,
+        _jpeg_bytes,
+        _jpeg_color_bytes,
+        _jpeg_pixels,
+        _jpeg_progressive_bytes,
+    )
+
+    caught = (NotImplementedError, ValueError, _struct.error, IndexError)
+    rng = random.Random(0)
+    escaped = []
+    for make in (
+        _jpeg_bytes,
+        _jpeg_color_bytes,
+        _jpeg_progressive_bytes,
+        _jpeg_arith_bytes,
+        _jpeg_arith_prog_bytes,
+    ):
+        for doc_id in range(6):
+            good = make(doc_id)
+            cases = [good[:k] for k in range(len(good))]
+            for _ in range(200):
+                bad = bytearray(good)
+                bad[rng.randrange(len(bad))] ^= rng.randrange(1, 256)
+                cases.append(bytes(bad))
+            for data in cases:
+                try:
+                    _jpeg_pixels(data)
+                except caught:
+                    pass
+                except Exception as e:  # noqa: BLE001 — the property under test
+                    escaped.append((make.__name__, doc_id, type(e).__name__, str(e)[:60]))
+    assert escaped == []
+
+
+def test_jpeg_decoded_pixels_pinned_all_modes():
+    """Seeded random NON-flat coefficient blocks through every encoder
+    (baseline gray/4:4:4/4:2:0, progressive 1 and 3 components,
+    sequential and progressive arithmetic), decoded by _jpeg_pixels:
+    the sha256 of each decoded image is pinned, so the dequant/IDCT/
+    upsample/color path cannot drift in any mode (the closed-form
+    fixtures are flat DC blocks; the libjpeg gold tests compare
+    coefficients, not pixels)."""
+    import hashlib
+    import random
+
+    from fuse_query_spark.operators.multimodal import (
+        _jpeg_encode_420,
+        _jpeg_encode_arith_gray,
+        _jpeg_encode_arith_prog_gray,
+        _jpeg_encode_color,
+        _jpeg_encode_gray,
+        _jpeg_encode_progressive,
+        _jpeg_pixels,
+    )
+
+    rng = random.Random(2024)
+
+    def blocks(n):
+        out = []
+        for _ in range(n):
+            zz = [0] * 64
+            zz[0] = rng.randint(-60, 60)
+            for _k in range(rng.randint(0, 10)):
+                zz[rng.randint(1, 63)] = rng.randint(-40, 40)
+            out.append(zz)
+        return out
+
+    q = [1 + (i * 5) % 11 for i in range(64)]
+    files = {
+        "gray": _jpeg_encode_gray(blocks(6), 20, 12, q),
+        "color": _jpeg_encode_color([blocks(4) for _ in range(3)], 13, 16, q),
+        "420": _jpeg_encode_420(blocks(16), blocks(4), blocks(4), 2, 2, q),
+        "prog1": _jpeg_encode_progressive([blocks(6)], 24, 11, q),
+        "prog3": _jpeg_encode_progressive([blocks(4) for _ in range(3)], 16, 16, q),
+        "arith": _jpeg_encode_arith_gray(blocks(6), 24, 16, q),
+        "arith_prog": _jpeg_encode_arith_prog_gray(blocks(6), 16, 21, q),
+    }
+    want = {
+        "gray": (20, 12, "1b7639dd9384bb7093ab43c9b33fd42dfa24d34ab76e6c9f757ac14df3625a62"),
+        "color": (13, 16, "cb9d4966c47a25546c46abb72d9ea973d6851bc2fc8b91c3c4621db229076c24"),
+        "420": (32, 32, "451e348ce26cecffebbb88d90fddf01b74a1de8aece23b5c9d21de347aff326e"),
+        "prog1": (24, 11, "8cc583e73c8cdb753eb66ef56e5ec40bea96c2e8882fb6fa411b27663e674199"),
+        "prog3": (16, 16, "2372ed188c7419ed894c5ef43ae2e8192c5e281bc94865a13715620150ef2e6e"),
+        "arith": (24, 16, "8953f76e0f96b3d14bb120ca38aa23ee9cb52898309c13e5fa73068b555e7f37"),
+        "arith_prog": (16, 21, "d2fa3c064b76addd92e76cabc4666aafde5b7b59ba2f4030eb68720e6afd43a1"),
+    }
+    got = {}
+    for kind, jpg in files.items():
+        w, h, px = _jpeg_pixels(jpg)
+        got[kind] = (w, h, hashlib.sha256(px).hexdigest())
+    assert got == want
 
 
 class TestLibraryDecoder:

@@ -115,7 +115,7 @@ class Engine:
         register_udfs(self.spark)
         self.catalog = Catalog()
         self.current_db = "default"
-        self.store = None  # StoreClient once attach_store() is called
+        self.store = None  # StoreFlightClient once attach_store() is called
         # live-statement registry backing system.processes
         # (processes_table.rs:27 keeps a ProcessInfo per running query)
         self._live: dict[str, dict] = {}
@@ -183,24 +183,23 @@ class Engine:
     # ---------- public API ----------
 
     def attach_store(self, url: str) -> None:
-        """Attach a remote store (sources/remote_store.FuseStore). The
-        reference connects to fusestore at session build
-        (store_client_provider.rs) and registers its databases
-        (datasource.rs register_remote_database); here: every store
-        database becomes a remote-engine catalog entry, and CREATE
-        DATABASE without `ENGINE = Local` lands store-side from now
-        on (09_0000_remote_create_table: engine shows `remote`).
-        grpc:// urls attach over the Arrow Flight transport (the
-        reference store's actual protocol — remote_store_flight.py);
-        http:// over the HTTP/JSON transport. Same client surface."""
-        if url.startswith("grpc://"):
-            from fuse_query_spark.sources.remote_store_flight import StoreFlightClient
+        """Attach a remote store (sources/remote_store.FuseStoreFlight)
+        at a grpc:// url. The reference connects to fusestore over
+        Arrow Flight at session build (store_client_provider.rs) and
+        registers its databases (datasource.rs
+        register_remote_database); here: every store database becomes
+        a remote-engine catalog entry, and CREATE DATABASE without
+        `ENGINE = Local` lands store-side from now on
+        (09_0000_remote_create_table: engine shows `remote`)."""
+        if not url.startswith("grpc://"):
+            raise ValueError(f"remote store url must be grpc://host:port, got {url!r}")
+        from fuse_query_spark.sources.remote_store import StoreFlightClient
 
-            self.store = StoreFlightClient(url)
-        else:
-            from fuse_query_spark.sources.remote_store import StoreClient
+        self.store = StoreFlightClient(url)
+        self._sync_store()
 
-            self.store = StoreClient(url)
+    def _sync_store(self) -> None:
+        """Register every store database and table in the catalog."""
         for db, tables in self.store.databases().items():
             self.catalog.databases.setdefault(db, {})
             self.catalog.remote_dbs.add(db)
@@ -1456,7 +1455,7 @@ class Engine:
             # remote_table.rs read_plan: ask the store for the part
             # list, then scan the parts. Executors read the parquet
             # parts directly (the metastore/object-store split) — the
-            # HTTP hop carries only metadata, never rows.
+            # Flight call carries only metadata, never rows.
             if self.store is None:
                 raise UnsupportedStatement(
                     f"Table '{tdef.database}.{tdef.name}' is remote but no store is attached"
@@ -1825,7 +1824,8 @@ class Engine:
 
     def _parse_schema(self, cols: str) -> StructType:
         fields = []
-        for part in self._split_cols(cols):
+        # type parameters nest in both brackets: decimal(20,2), map<string,bigint>
+        for part in self._split_cols(cols, "(<", ")>"):
             mm = re.match(r"(?s)^\s*(\w+)\s+(.+?)\s*$", part)
             if not mm:
                 raise UnsupportedStatement(f"Cannot parse column def: {part}")
@@ -1836,12 +1836,12 @@ class Engine:
         return StructType(fields)
 
     @staticmethod
-    def _split_cols(cols: str) -> list[str]:
+    def _split_cols(cols: str, opens: str = "(", closes: str = ")") -> list[str]:
         parts, depth, cur = [], 0, []
         for ch in cols:
-            if ch == "(":
+            if ch in opens:
                 depth += 1
-            elif ch == ")":
+            elif ch in closes:
                 depth -= 1
             if ch == "," and depth == 0:
                 parts.append("".join(cur))
@@ -1892,7 +1892,14 @@ class Engine:
         # (09_0000: tables there report engine `remote`), else local.
         remote = self.store is not None and (engine or "").strip().lower() != "local"
         if remote:
-            self.store.create_database(name)
+            try:
+                self.store.create_database(name)
+            except DatabaseAlreadyExists:
+                if not if_not_exists:
+                    raise
+                # another engine created it after this one attached
+                self._sync_store()
+                return None
             self.catalog.remote_dbs.add(name)
         self.catalog.databases[name] = {}
         return None

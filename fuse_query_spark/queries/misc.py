@@ -249,19 +249,18 @@ _REMOTE = {"store": None, "engines": {}}
 
 
 def _remote_engine(spark, sf_dir):
-    """One process-lifetime FuseStore (ephemeral port, mkdtemp root)
+    """One process-lifetime FuseStoreFlight (ephemeral port, mkdtemp root)
     and one Engine per (session, sf_dir) attached to it. The store
     outlives the query call so the returned DataFrame's part paths
     stay readable when the driver collects later."""
     import tempfile
 
     from fuse_query_spark.engine import Engine
-    from fuse_query_spark.sources.remote_store import FuseStore
+    from fuse_query_spark.sources.remote_store import FuseStoreFlight
 
     if _REMOTE["store"] is None:
-        store = FuseStore(os.path.join(tempfile.mkdtemp(prefix="fuse_store_"), "root"))
-        store.start()
-        _REMOTE["store"] = store
+        root = os.path.join(tempfile.mkdtemp(prefix="fuse_store_"), "root")
+        _REMOTE["store"] = FuseStoreFlight(root)
     key = (id(spark), sf_dir)
     if key not in _REMOTE["engines"]:
         eng = Engine(spark)
@@ -288,7 +287,7 @@ def _remote_engine(spark, sf_dir):
 def remote_engine_scan(spark, sf_dir):
     """Remote engine end-to-end (remote_table.rs:27-181,
     remote_database.rs, remote_table_do_read.rs re-expressed over the
-    HTTP store analog in sources/remote_store.py): CREATE DATABASE →
+    Flight store analog in sources/remote_store.py): CREATE DATABASE →
     store-side database, CREATE TABLE → store schema registry,
     INSERT … SELECT → Spark writes parquet blocks shipped to the
     store, SELECT → read_plan returns part locations that Spark scans

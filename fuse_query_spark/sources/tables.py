@@ -97,8 +97,6 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataF
     RepartitionByExpression, so the scan's ReadSchema/PushedFilters
     are unchanged (plan-gated in tests/test_plans.py)."""
     df = table(spark, sf_dir, name)
-    if os.environ.get("FQ_SPREAD_DISABLE"):  # measurement kill-switch
-        return df
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

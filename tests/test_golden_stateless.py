@@ -38,6 +38,7 @@ from fuse_query_spark.engine import Engine
 from fuse_query_spark.errors import FuseQueryError
 
 SUITE_DIR = "/root/reference/tests/suites/0_stateless"
+_SUITE_ABSENT = "reference-suite-absent"  # the one case collected without SUITE_DIR
 
 SKIP: set[str] = set()  # r5: the remote-engine analog closed the last 2 skips
 
@@ -58,8 +59,8 @@ _ERRCODE = re.compile(r"--\s*\{\s*ErrorCode\s+(\d+)")
 
 
 def _sql_files():
-    if not os.path.isdir(SUITE_DIR):  # reference checkout not present
-        return []
+    if not os.path.isdir(SUITE_DIR):
+        return [_SUITE_ABSENT]
     return sorted(
         f[:-4] for f in os.listdir(SUITE_DIR) if f.endswith(".sql") and f[:-4] not in SKIP
     )
@@ -118,17 +119,19 @@ def _produces_output(stmt: str) -> bool:
 
 @pytest.mark.parametrize("name", _sql_files())
 def test_reference_golden_file(spark, name, tmp_path, request):
+    if name == _SUITE_ABSENT:
+        pytest.fail(f"reference stateless suite not found: {SUITE_DIR}")
     statements = _parse(os.path.join(SUITE_DIR, f"{name}.sql"))
     expected = open(os.path.join(SUITE_DIR, f"{name}.result")).read().splitlines()
     engine = Engine(spark)
     # The reference CI runs fuse-query connected to fusestore, so
     # `CREATE DATABASE x` (no ENGINE clause) lands remote (09_*). A
     # fresh per-test store keeps files isolated from each other.
-    from fuse_query_spark.sources.remote_store import FuseStore
+    from fuse_query_spark.sources.remote_store import FuseStoreFlight
 
-    store = FuseStore(str(tmp_path / "store"))
-    engine.attach_store(store.start())
-    request.addfinalizer(store.stop)
+    store = FuseStoreFlight(str(tmp_path / "store"))
+    request.addfinalizer(store.shutdown)
+    engine.attach_store(store.url)
     for pre in PRE_SQL.get(name, []):
         engine.sql(pre)
     cursor = 0

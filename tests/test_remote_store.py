@@ -1,7 +1,7 @@
 """Remote engine / store analog (sources/remote_store.py): the
 reference's fusestore-backed Remote engine (remote_table.rs:27-181,
-remote_database.rs) mapped to an HTTP meta service + direct executor
-scans of store parquet parts.
+remote_database.rs) mapped to a Flight meta service + direct executor
+scans of store parquet parts, driven through the Engine.
 """
 
 from __future__ import annotations
@@ -9,16 +9,20 @@ from __future__ import annotations
 import pytest
 
 from fuse_query_spark.engine import Engine
-from fuse_query_spark.errors import FuseQueryError, UnknownDatabase, UnknownTable
-from fuse_query_spark.sources.remote_store import FuseStore, StoreClient
+from fuse_query_spark.errors import (
+    DatabaseAlreadyExists,
+    FuseQueryError,
+    UnknownDatabase,
+    UnknownTable,
+)
+from fuse_query_spark.sources.remote_store import FuseStoreFlight, StoreFlightClient
 
 
 @pytest.fixture()
 def store(tmp_path):
-    s = FuseStore(str(tmp_path / "store"))
-    s.start()
+    s = FuseStoreFlight(str(tmp_path / "store"))
     yield s
-    s.stop()
+    s.shutdown()
 
 
 def _engine(spark, store) -> Engine:
@@ -85,15 +89,14 @@ class TestRemoteEngine:
             "INSERT INTO keep.t SELECT number FROM numbers(10)"
         )
         root = store.state.root
-        store.stop()
-        revived = FuseStore(root)
-        revived.start()
+        store.shutdown()
+        revived = FuseStoreFlight(root)
         try:
             eng2 = Engine(spark)
             eng2.attach_store(revived.url)
             assert eng2.sql("SELECT SUM(n) AS s FROM keep.t").collect()[0].s == 45
         finally:
-            revived.stop()
+            revived.shutdown()
 
     def test_drop_table_removes_store_files(self, spark, store):
         import os
@@ -132,9 +135,55 @@ class TestRemoteEngine:
         assert df.count() == 9
 
 
+    def test_typed_columns_roundtrip(self, spark, store):
+        # INSERT … SELECT ships Spark-written parts (timestamps as INT96)
+        # through the store's do_put, which re-encodes them: the SELECT
+        # must read every column back under the declared schema, also
+        # timestamps outside the nanosecond range (1677..2262)
+        eng = _engine(spark, store)
+        eng.sql(
+            "CREATE DATABASE db1; USE db1;"
+            "CREATE TABLE t(n bigint, ts timestamp, d date, x decimal(20,2),"
+            " a array<bigint>, m map<string, bigint>)"
+        )
+        select = (
+            "SELECT number AS n,"
+            " CASE number WHEN 0 THEN TIMESTAMP'0001-01-01 00:00:00'"
+            " WHEN 1 THEN TIMESTAMP'9999-12-31 23:59:59.999999'"
+            " ELSE timestamp_micros(1704164645123456 + number) END AS ts,"
+            " date_add(DATE'2024-01-02', CAST(number AS INT)) AS d,"
+            " CAST(12345678901234567.25 AS DECIMAL(20,2)) + number AS x,"
+            " IF(number = 2, NULL, array(number, 2)) AS a,"
+            " map('k', number) AS m"
+            " FROM numbers(4)"
+        )
+        eng.sql(f"INSERT INTO t {select}")
+        # year 1 does not fit a Python datetime in every time zone
+        cols = "n, unix_micros(ts) AS ts, d, x, a, m"
+        want = eng.sql(f"SELECT {cols} FROM ({select}) ORDER BY n").collect()
+        got = eng.sql(f"SELECT {cols} FROM t ORDER BY n").collect()
+        assert got == want
+        assert len(got) == 4 and got[2].a is None
+
+    def test_create_database_if_not_exists_sees_other_engine(self, spark, store):
+        a = _engine(spark, store)
+        b = _engine(spark, store)
+        b.sql("CREATE DATABASE late; CREATE TABLE late.t(n bigint)")
+        a.sql("CREATE DATABASE IF NOT EXISTS late")  # no-op, not an error
+        assert a.sql("SELECT COUNT(*) AS c FROM late.t").collect()[0].c == 0
+        b.sql("CREATE DATABASE late2")
+        with pytest.raises(DatabaseAlreadyExists) as exc:
+            a.sql("CREATE DATABASE late2")
+        assert exc.value.code == 3
+
+    def test_attach_rejects_non_flight_url(self, spark):
+        with pytest.raises(ValueError, match="grpc://"):
+            Engine(spark).attach_store("http://127.0.0.1:1")
+
+
 class TestStoreClient:
     def test_meta_errors_map_to_reference_codes(self, store):
-        c = StoreClient(store.url)
+        c = StoreFlightClient(store.url)
         with pytest.raises(UnknownDatabase):
             c.drop_database("nope")
         c.create_database("db")
@@ -144,6 +193,50 @@ class TestStoreClient:
             c.append_parquet("db", "nope", b"")
 
     def test_illegal_identifiers_rejected(self, store):
-        c = StoreClient(store.url)
+        c = StoreFlightClient(store.url)
         with pytest.raises(ConnectionError):
             c.create_database("../evil")
+
+    def test_duplicate_database_keeps_its_type(self, store):
+        c = StoreFlightClient(store.url)
+        c.create_database("x")
+        with pytest.raises(DatabaseAlreadyExists) as exc:
+            c.create_database("x")
+        assert str(exc.value) == "Code: 3, Database 'x' already exists"
+
+    def test_wire_errors_carry_the_message_once(self, store):
+        c = StoreFlightClient(store.url)
+        with pytest.raises(UnknownDatabase) as exc:
+            c.drop_database("nope")
+        assert exc.value.message == "Unknown database: 'nope'"
+        assert str(exc.value) == "Code: 3, Unknown database: 'nope'"
+
+    def test_empty_append_writes_no_part(self, store):
+        import io
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        c = StoreFlightClient(store.url)
+        c.create_database("db")
+        c.create_table("db", "t", '{"type":"struct","fields":[]}')
+        buf = io.BytesIO()
+        pq.write_table(pa.table({"n": pa.array([], pa.int64())}), buf)
+        assert c.append_parquet("db", "t", b"") == ""
+        assert c.append_parquet("db", "t", buf.getvalue()) == ""
+        assert c.read_plan("db", "t")["parts"] == []
+
+    def test_sub_microsecond_timestamps_not_truncated(self, store):
+        import io
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        c = StoreFlightClient(store.url)
+        c.create_database("db")
+        c.create_table("db", "t", '{"type":"struct","fields":[]}')
+        buf = io.BytesIO()
+        pq.write_table(pa.table({"ts": pa.array([1_000_000_001], pa.timestamp("ns"))}), buf)
+        with pytest.raises(ConnectionError, match="lose data"):
+            c.append_parquet("db", "t", buf.getvalue())
+        assert c.read_plan("db", "t")["parts"] == []

@@ -1,6 +1,5 @@
-"""Flight transport for the fusestore analog, driven end-to-end with
-a real pyarrow.flight client AND through the Engine (`attach_store`
-with a grpc:// url).
+"""Flight protocol of the fusestore analog (sources/remote_store.py),
+driven with a real pyarrow.flight client AND through the Engine.
 
 Parity targets: fusestore flight_service.rs:84-118 (BasicAuth
 handshake, root-only), :67-79 (token check on every call),
@@ -24,7 +23,7 @@ from fuse_query_spark.errors import (
     UnknownDatabase,
     UnknownTable,
 )
-from fuse_query_spark.sources.remote_store_flight import (
+from fuse_query_spark.sources.remote_store import (
     FuseStoreFlight,
     StoreFlightClient,
 )
@@ -39,7 +38,7 @@ def server(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def client(server):
-    return StoreFlightClient(f"grpc://localhost:{server.port}")
+    return StoreFlightClient(server.url)
 
 
 def _parquet_bytes(rows: dict) -> bytes:
@@ -50,14 +49,14 @@ def _parquet_bytes(rows: dict) -> bytes:
 
 class TestAuth:
     def test_unknown_user_rejected(self, server):
-        from fuse_query_spark.sources.remote_store_flight import _ClientAuth
+        from fuse_query_spark.sources.remote_store import _ClientAuth
 
-        con = flight.connect(f"grpc://localhost:{server.port}")
+        con = flight.connect(server.url)
         with pytest.raises(flight.FlightUnauthenticatedError, match="Don't know user"):
             con.authenticate(_ClientAuth(username="mallory"))
 
     def test_unauthenticated_calls_rejected(self, server):
-        con = flight.connect(f"grpc://localhost:{server.port}")
+        con = flight.connect(server.url)
         with pytest.raises(flight.FlightUnauthenticatedError):
             list(con.do_action(flight.Action("", b'{"ListDatabases": {}}')))
 
@@ -128,7 +127,7 @@ class TestWireErrorMapping:
         first one, degrading a typed UnknownTable into ConnectionError."""
         import json
 
-        from fuse_query_spark.sources.remote_store_flight import _map_client_error
+        from fuse_query_spark.sources.remote_store import _map_client_error
 
         inner = json.dumps(
             {"code": 25, "error": 'no table with schema {"fields": {"a": 1}}'}
@@ -141,7 +140,7 @@ class TestWireErrorMapping:
 class TestEngineOverFlight:
     def test_remote_engine_end_to_end(self, spark, server):
         eng = Engine(spark)
-        eng.attach_store(f"grpc://localhost:{server.port}")
+        eng.attach_store(server.url)
         eng.sql(
             "CREATE DATABASE fldb; USE fldb;"
             "CREATE TABLE nums(n bigint, s varchar);"

@@ -201,17 +201,49 @@ class TestRandomProjection:
         b = random_projection(emb, 64, 16).orderBy("vec_id").collect()
         assert a == b
 
-    def test_arrow_body_bit_identical_to_jvm_fold(self, spark, sf_dir):
-        """r13: random_projection's Arrow/NumPy body must be BIT-exact
-        against the JVM Column fold it replaced (the oracle hashes
-        doubles exactly), including the NULL semantics for NULL /
-        short / long / NULL-element vectors, which the JVM zip_with +
-        aggregate fold projects to all-NULL."""
-        import os
+    @staticmethod
+    def _numpy_fold(df, in_dim=64, out_dim=16, narrow=False):
+        """Independent reference: per row and output, a scalar float64
+        left-fold over the input index, then the scale. NULL, short,
+        long and NULL-element vectors project to all-NULL."""
+        import numpy as np
 
+        from fuse_query_spark.operators.similarity import _rademacher_signs
+
+        signs = _rademacher_signs(in_dim, out_dim)
+        scale = np.float64(1.0) / np.sqrt(np.float64(out_dim))
+        out = {}
+        for r in df.collect():
+            v = r["embedding"]
+            if v is None or len(v) != in_dim or any(x is None for x in v):
+                out[r["vec_id"]] = [None] * out_dim
+                continue
+            xs = [np.float64(np.float32(x) if narrow else x) for x in v]
+            proj = []
+            for j in range(out_dim):
+                acc = np.float64(0.0)
+                for i in range(in_dim):
+                    acc = acc + xs[i] * np.float64(signs[i][j])
+                proj.append(float(acc * scale))
+            out[r["vec_id"]] = proj
+        return out
+
+    @staticmethod
+    def _projected(df):
+        from fuse_query_spark.operators.similarity import random_projection
+
+        return {
+            r["vec_id"]: [r[f"proj{j}"] for j in range(16)]
+            for r in random_projection(df, 64, 16).collect()
+        }
+
+    def test_arrow_body_bit_identical_to_numpy_fold(self, spark, sf_dir):
+        """random_projection must be BIT-exact against a scalar float64
+        left-fold (the oracle hashes doubles exactly), including the
+        NULL semantics for NULL / short / long / NULL-element vectors.
+        The odd rows share one batch, so the valid-row mask is exercised."""
         from pyspark.sql import Row
 
-        from fuse_query_spark.operators.similarity import random_projection
         from fuse_query_spark.sources.tables import table
 
         emb = table(spark, sf_dir, "embeddings")
@@ -224,15 +256,19 @@ class TestRandomProjection:
                 Row(vec_id=5, embedding=[float(i) for i in range(65)]),
             ],
             schema="vec_id bigint, embedding array<float>",
-        )
+        ).coalesce(1)
         for df in (emb, odd):
-            os.environ["FQ_RP_ARROW_DISABLE"] = "1"
-            try:
-                jvm = random_projection(df, 64, 16).orderBy("vec_id").collect()
-            finally:
-                del os.environ["FQ_RP_ARROW_DISABLE"]
-            arrow = random_projection(df, 64, 16).orderBy("vec_id").collect()
-            assert jvm == arrow
+            assert self._projected(df) == self._numpy_fold(df)
+
+    def test_double_input_not_narrowed(self, spark):
+        """array<double> input keeps every bit, in a clean batch and in
+        one where a NULL row is masked out."""
+        vec = [0.1 + i * 1e-9 for i in range(64)]
+        for rows in ([(1, vec)], [(1, vec), (2, None)]):
+            df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>").coalesce(1)
+            want = self._numpy_fold(df)
+            assert want[1] != self._numpy_fold(df, narrow=True)[1]  # narrowing shows
+            assert self._projected(df) == want
 
     def test_sign_matrix_balanced(self):
         """md5-parity signs are ~balanced (no constant row/col)."""
